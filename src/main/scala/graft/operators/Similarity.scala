@@ -1138,10 +1138,10 @@ object Similarity {
       .withColumn("ac", cosine(col("vq"), col("cv")))
       .withColumn("ark", row_number().over(wA))
       .select(col("q_id"), col("cid"), col("ark"))
-      .localCheckpoint(true) // |panel|·k rows, consumed once per config
+      .localCheckpoint(true) // |panel|·k rows, consumed once in total (the one probe pass below)
     val exact = topkBruteForceUnsorted(spark, dir)
       .select(col("q_id"), col("neighbor_id"))
-      .localCheckpoint(true) // 5·|panel| rows, consumed twice per config
+      .localCheckpoint(true) // 5·|panel| rows, consumed twice in total (n_hits join, n_exact count)
     // The grid's candidate sets are NESTED (ark ≤ 2 ⊆ ark ≤ 4 ⊆ ark ≤ 6),
     // so ONE probe pass at the largest nprobe derives every config: a
     // vector first becomes a candidate at its minimal probed-list rank

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.GQuery
-import graft.streaming.KStreams
+import graft.streaming.{Checkpoints, KStreams}
 import graft.streaming.KStreams.Record
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -102,12 +102,12 @@ object StreamingOps {
     * output mode → converged counts equal the batch answer. */
   def windowedCounts(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     val name = uniq("win_counts")
-    val q = recordStream(spark, dir)
+    val q = Checkpoints.start(recordStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("value"))
       .agg(count(lit(1)).as("n"))
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete).start()
+      .outputMode(OutputMode.Complete))
     q.processAllAvailable(); q.stop()
     spark.table(name)
       .select(col("window.start").as("w_start"), col("value"), col("n"))
@@ -124,11 +124,11 @@ object StreamingOps {
     * DISTINCT regardless of arrival order. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     val name = uniq("dedup_stream")
-    val q = recordStream(spark, dir)
+    val q = Checkpoints.start(recordStream(spark, dir)
       .dropDuplicates("key", "value")
       .select(col("key"), col("value"))
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).start()
+      .outputMode(OutputMode.Append))
     q.processAllAvailable(); q.stop()
     spark.table(name).orderBy(col("key"), col("value"))
   }
@@ -146,12 +146,12 @@ object StreamingOps {
     * batch DISTINCT exactly. */
   def streamDedupWm(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     val name = uniq("dedup_wm_stream")
-    val q = recordStream(spark, dir)
+    val q = Checkpoints.start(recordStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("key", "value")
       .select(col("key"), col("value"))
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).start()
+      .outputMode(OutputMode.Append))
     q.processAllAvailable(); q.stop()
     spark.table(name).orderBy(col("key"), col("value"))
   }
@@ -167,11 +167,11 @@ object StreamingOps {
       .filter(col("c_custkey") < 150)
       .select(col("c_custkey").cast("string").as("key"),
         col("c_mktsegment").as("segment"))
-    val q = recordStream(spark, dir)
+    val q = Checkpoints.start(recordStream(spark, dir)
       .join(broadcast(dim), Seq("key"))
       .select(col("key"), col("value"), col("ts"), col("segment"))
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).start()
+      .outputMode(OutputMode.Append))
     q.processAllAvailable(); q.stop()
     spark.table(name)
       .groupBy(col("segment"), col("value"))
@@ -200,13 +200,13 @@ object StreamingOps {
       .filter(col("value") === "purchase")
       .select(col("key").as("p_key"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "2 hours")
-    val q = purchases.join(clicks,
+    val q = Checkpoints.start(purchases.join(clicks,
         col("key") === col("p_key") &&
         col("click_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("click_ts") <= col("p_ts"))
       .select(col("p_key").as("user_key"), col("p_ts"), col("click_ts"))
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).start()
+      .outputMode(OutputMode.Append))
     q.processAllAvailable(); q.stop()
     spark.table(name)
       .groupBy(col("user_key"))
@@ -295,12 +295,12 @@ object StreamingOps {
     try {
       import spark.implicits._
       val name = uniq("ttl_latest")
-      val q = recordStream(spark, dir)
+      val q = Checkpoints.start(recordStream(spark, dir)
         .withWatermark("ts", "0 seconds")
         .groupByKey(_.key)
         .transformWithState(new TtlLatestProcessor, TimeMode.EventTime(), OutputMode.Update())
         .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update).start()
+        .outputMode(OutputMode.Update))
       q.processAllAvailable(); q.stop()
       // converged table = latest upsert per key, minus keys whose
       // eviction tombstone came after every upsert (in this bounded
@@ -430,12 +430,12 @@ object StreamingOps {
       val nKeys = sample.map(_.key).distinct.size
       val ms = MemoryStream[SeqRecord]
       val name = uniq("punctuate")
-      val q = ms.toDS().groupByKey(_.key)
+      val q = Checkpoints.start(ms.toDS().groupByKey(_.key)
         .transformWithState(new ProcTtlProcessor(400L),
           TimeMode.ProcessingTime(), OutputMode.Update())
         .writeStream.format("memory").queryName(name)
         .option("checkpointLocation", cp)
-        .outputMode(OutputMode.Update).start()
+        .outputMode(OutputMode.Update))
       ms.addData(sample)
       // the engine self-schedules batches; converged = every key
       // evicted exactly once (all data arrived in one batch, so no
@@ -493,14 +493,14 @@ object StreamingOps {
       .filter(col("value") === "purchase")
       .select(col("key").as("p_key"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "0 seconds")
-    val q = purchases.join(clicks,
+    val q = Checkpoints.start(purchases.join(clicks,
         col("key") === col("p_key") &&
         col("click_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("click_ts") <= col("p_ts"),
       "leftOuter")
       .select(col("p_key").as("user_key"), col("p_ts"), col("click_ts"))
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).start()
+      .outputMode(OutputMode.Append))
     q.processAllAvailable(); q.stop()
     // µs-exact cutoff keyed off the watermark the stream actually
     // REACHES — the global watermark is the MIN across the two inputs'
@@ -554,7 +554,7 @@ object StreamingOps {
       .filter(col("value") === "purchase")
       .select(col("key").as("p_key"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "0 seconds")
-    val q = purchases.join(clicks,
+    val q = Checkpoints.start(purchases.join(clicks,
         col("key") === col("p_key") &&
         col("click_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("click_ts") <= col("p_ts"),
@@ -562,7 +562,7 @@ object StreamingOps {
       .select(coalesce(col("p_key"), col("key")).as("user_key"),
         col("p_ts"), col("click_ts"))
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).start()
+      .outputMode(OutputMode.Append))
     q.processAllAvailable(); q.stop()
     // the global watermark is the MIN across the two inputs' event-time
     // maxima (multipleWatermarkPolicy=min) — the last click/purchase is
@@ -656,7 +656,7 @@ object StreamingOps {
       if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       else raw
-    val q = withTs
+    val q = Checkpoints.start(withTs
       .select(col("user_id").cast("string").as("key"),
         col("event_type").as("value"), col("ts"), col("event_id"))
       .writeStream
@@ -669,8 +669,7 @@ object StreamingOps {
         val v = s"$base/v$id"
         merged.write.mode("overwrite").parquet(v)
         current = Some(v)
-      }
-      .start()
+      })
     q.processAllAvailable(); q.stop()
     spark.read.parquet(current.get)
       .select(col("key"), col("value"), col("ts"))
@@ -731,11 +730,11 @@ object StreamingOps {
         .select(
           regexp_replace(trim(lower(col("text"))), " +", " ").as("norm"),
           col("doc_id")).as[Doc]
-      val q = docs.groupByKey(_.norm)
+      val q = Checkpoints.start(docs.groupByKey(_.norm)
         .transformWithState(new DedupProcessor, TimeMode.None(), OutputMode.Update())
         .toDF("norm", "doc_id", "n_copies")
         .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update).start()
+        .outputMode(OutputMode.Update))
       q.processAllAvailable(); q.stop()
       // converged state = last update per text (n_copies only grows)
       spark.table(name)
@@ -799,11 +798,11 @@ object StreamingOps {
       val evs = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
         .select(col("event_type"), col("user_id")).as[TypedUser]
-      val q = evs.groupByKey(_.event_type)
+      val q = Checkpoints.start(evs.groupByKey(_.event_type)
         .transformWithState(new KmvDistinctProcessor, TimeMode.None(), OutputMode.Update())
         .toDF("event_type", "est_distinct")
         .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update).start()
+        .outputMode(OutputMode.Update))
       q.processAllAvailable(); q.stop()
       val est = spark.table(name).groupBy(col("event_type"))
         .agg(max(col("est_distinct")).as("est_distinct"))
@@ -888,7 +887,7 @@ object StreamingOps {
     val state = graft.util.scratchDir("mv_maintain")
     val version = new java.util.concurrent.atomic.AtomicInteger(0)
     val ms = MemoryStream[Int]
-    val q = ms.toDS().writeStream
+    val q = Checkpoints.start(ms.toDS().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Int], _: Long) =>
         val salts = batch.collect()
         if (salts.nonEmpty) {
@@ -908,8 +907,7 @@ object StreamingOps {
           ()
         }
       }
-      .option("checkpointLocation", graft.util.scratchDir("mv_maintain_cp"))
-      .start()
+      .option("checkpointLocation", graft.util.scratchDir("mv_maintain_cp")))
     (0 until 5).foreach { salt => ms.addData(salt); q.processAllAvailable() }
     q.stop()
     (state, version.get())
@@ -936,7 +934,7 @@ object StreamingOps {
     val purchases = withTs.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"))
     val out = graft.util.scratchDir("scd2_enrich_out")
-    val q = purchases.writeStream
+    val q = Checkpoints.start(purchases.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!batch.isEmpty)
           graft.plans.AsOf.join(batch, dim, "user_id", "d_user", "ts", "valid_from")
@@ -944,8 +942,7 @@ object StreamingOps {
               col("valid_from"), col("state"))
             .write.mode("append").parquet(out)
       }
-      .option("checkpointLocation", graft.util.scratchDir("scd2_enrich_cp"))
-      .start()
+      .option("checkpointLocation", graft.util.scratchDir("scd2_enrich_cp")))
     q.processAllAvailable(); q.stop()
     spark.read.parquet(out).orderBy(col("event_id"))
   }
@@ -993,10 +990,10 @@ object StreamingOps {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val evs = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val q = evs.groupBy(col("event_type"))
+    val q = Checkpoints.start(evs.groupBy(col("event_type"))
       .agg(kllSketch(col("value"), 200).as("sk"))
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete).start()
+      .outputMode(OutputMode.Complete))
     q.processAllAvailable(); q.stop()
     val out = graft.util.materializeLocal(spark.table(name)
       .select(col("event_type"), kllCount(col("sk")).as("n"),
@@ -1156,12 +1153,12 @@ object StreamingOps {
       // lifecycle for this run-to-convergence entry. The TTL path is
       // real and spec-verified (Round7Spec feeds a bucket across the
       // TTL boundary); a 24/7 ingest deployment arms it
-      val q = banded.groupByKey(d => (d.band, d.band_key))
+      val q = Checkpoints.start(banded.groupByKey(d => (d.band, d.band_key))
         .transformWithState(new NearDupProcessor(),
           TimeMode.None(), OutputMode.Append())
         .toDF("a_id", "b_id")
         .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
+        .outputMode(OutputMode.Append))
       q.processAllAvailable(); q.stop()
       // a pair can surface from several bands — distinct before the
       // exact-Jaccard verify shared with the batch LSH path
@@ -1182,12 +1179,12 @@ object StreamingOps {
     * watermark passes the gap; bounded regardless of stream length). */
   def streamSessionCounts(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     val name = uniq("session_counts")
-    val q = recordStream(spark, dir)
+    val q = Checkpoints.start(recordStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "30 minutes"), col("key"))
       .agg(count(lit(1)).as("n_events"))
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete).start()
+      .outputMode(OutputMode.Complete))
     q.processAllAvailable(); q.stop()
     spark.table(name)
       .select(col("key"), col("session_window.start").as("s_start"), col("n_events"))
@@ -1216,12 +1213,11 @@ object StreamingOps {
     * parquet "topic"; the read-back aggregation must equal batch. */
   def streamForeachBatch(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     val out = graft.util.scratchDir("fe_batch_sink")
-    val q = recordStream(spark, dir)
+    val q = Checkpoints.start(recordStream(spark, dir)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[KStreams.Record], _: Long) =>
         batch.write.mode("append").parquet(out)
-      }
-      .start()
+      })
     q.processAllAvailable(); q.stop()
     spark.read.parquet(out)
       .groupBy(col("value"))
@@ -1260,14 +1256,13 @@ object StreamingOps {
       .filter(col("vec_id") < 20)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val out = graft.util.scratchDir("ann_serve_out")
-    val q = queries.writeStream
+    val q = Checkpoints.start(queries.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty)
           Similarity.ivfTopkFor(spark, dir, batch)
             .write.mode("append").parquet(out)
       }
-      .option("checkpointLocation", graft.util.scratchDir("ann_serve_cp"))
-      .start()
+      .option("checkpointLocation", graft.util.scratchDir("ann_serve_cp")))
     q.processAllAvailable(); q.stop()
     spark.read.parquet(out).orderBy(col("q_id"), col("rk"))
   }
@@ -1295,14 +1290,13 @@ object StreamingOps {
         .filter(col("vec_id") < 20)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val out = graft.util.scratchDir("fann_serve_out")
-      val q = queries.writeStream
+      val q = Checkpoints.start(queries.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty)
             Similarity.filteredTopkFor(spark, dir, batch)
               .write.mode("append").parquet(out)
         }
-        .option("checkpointLocation", graft.util.scratchDir("fann_serve_cp"))
-        .start()
+        .option("checkpointLocation", graft.util.scratchDir("fann_serve_cp")))
       q.processAllAvailable(); q.stop()
       spark.read.parquet(out).orderBy(col("q_id"), col("rk"))
     }
@@ -1318,7 +1312,7 @@ object StreamingOps {
   def streamDsv2Source(spark: SparkSession, dir: String): DataFrame =
     withStatePartitions(spark) {
       val name = uniq("dsv2stream")
-      val q = spark.readStream.format("graft.sources.GraftRangeSource")
+      val q = Checkpoints.start(spark.readStream.format("graft.sources.GraftRangeSource")
         .option("rows", "10000").option("slices", "4").option("batchRows", "2500")
         .load()
         .groupBy(col("label"))
@@ -1326,7 +1320,7 @@ object StreamingOps {
           sum(col("bucket")).as("bsum"),
           graft.util.dsum(col("value")).as("vsum"))
         .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete()).start()
+        .outputMode(OutputMode.Complete()))
       q.processAllAvailable(); q.stop()
       spark.table(name).orderBy(col("label"))
     }
@@ -1419,10 +1413,10 @@ object StreamingOps {
   def streamAvailableNowReplay(spark: SparkSession, dir: String): DataFrame =
     withStatePartitions(spark) {
       val name = uniq("availnow")
-      val q = KStreams.KStreamDS(compactedRecordStream(spark)).toTable.ds
+      val q = Checkpoints.start(KStreams.KStreamDS(compactedRecordStream(spark)).toTable.ds
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow()).start()
+        .trigger(Trigger.AvailableNow()))
       // self-termination IS the assertion: a regression that leaves the
       // query running (e.g. the source forgetting its AvailableNow
       // contract) fails loudly here instead of hanging the registry
@@ -1465,7 +1459,7 @@ object StreamingOps {
     * uninterrupted runs against the same wiring. */
   private[graft] def e2eUpsertRun(spark: SparkSession, out: String,
       ckpt: String, rows: Long): Unit = {
-    val q = spark.readStream.format("graft.sources.GraftRangeSource")
+    val q = Checkpoints.start(spark.readStream.format("graft.sources.GraftRangeSource")
       .option("rows", rows.toString).option("slices", "4")
       .option("batchRows", "2500").option("compactedKeys", "101")
       .load()
@@ -1481,7 +1475,7 @@ object StreamingOps {
         max(unix_micros(col("ts"))).as("last_offset"))
       .writeStream.format("graft.sources.GraftTextSink")
       .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Update()).start()
+      .outputMode(OutputMode.Update()))
     q.processAllAvailable(); q.stop()
   }
 
@@ -1570,11 +1564,11 @@ object StreamingOps {
     try {
       import spark.implicits._
       val name = uniq("user_topk")
-      val q = recordStream(spark, dir)
+      val q = Checkpoints.start(recordStream(spark, dir)
         .groupByKey(_.key)
         .transformWithState(new TopkProcessor, TimeMode.None(), OutputMode.Update())
         .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update).start()
+        .outputMode(OutputMode.Update))
       q.processAllAvailable(); q.stop()
       val latest = spark.table(name)
         .groupBy(col("key"))
@@ -1615,12 +1609,12 @@ object StreamingOps {
     withStatePartitions(spark) {
       val out = graft.util.scratchDir("dsv2streamsink")
       val ckpt = graft.util.scratchDir("dsv2streamsink_ckpt")
-      val q = spark.readStream.format("graft.sources.GraftRangeSource")
+      val q = Checkpoints.start(spark.readStream.format("graft.sources.GraftRangeSource")
         .option("rows", "10000").option("slices", "4").option("batchRows", "2500")
         .load()
         .writeStream.format("graft.sources.GraftTextSink")
         .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
+        .outputMode(OutputMode.Append()))
       q.processAllAvailable(); q.stop()
       spark.read.schema("id long, bucket long, label string, value double")
         .csv(out)
@@ -1657,7 +1651,7 @@ object StreamingOps {
     * oracle both cut at w_start ≤ max(ts) − 2 h. */
   def streamChainedStateful(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     val name = uniq("chained_stateful")
-    val q = recordStream(spark, dir)
+    val q = Checkpoints.start(recordStream(spark, dir)
       .withColumn("hour", date_trunc("hour", col("ts")))
       .withWatermark("ts", "0 seconds")
       .dropDuplicatesWithinWatermark("key", "value", "hour")
@@ -1665,7 +1659,7 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("value"), col("n"))
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).start()
+      .outputMode(OutputMode.Append))
     q.processAllAvailable(); q.stop()
     val maxTs = graft.util.t(spark, dir, "events")
       .agg(max(col("ts"))).first().getTimestamp(0)
@@ -1814,10 +1808,10 @@ object StreamingOps {
   private[graft] def runZscore(spark: SparkSession, src: Dataset[ZIn]): DataFrame = {
     import spark.implicits._
     val name = uniq("zscore")
-    val q = src.groupByKey(_.event_type)
+    val q = Checkpoints.start(src.groupByKey(_.event_type)
       .transformWithState(new ZscoreProcessor, TimeMode.None(), OutputMode.Append())
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).start()
+      .outputMode(OutputMode.Append))
     q.processAllAvailable(); q.stop()
     spark.table(name)
       .select(col("event_id"), col("event_type"), col("n_prior"))
@@ -1926,11 +1920,11 @@ object StreamingOps {
         implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
         val ms = MemoryStream[CusumIn]
         val name = uniq("cusum_mon")
-        val q = ms.toDS().groupByKey(_.event_type)
+        val q = Checkpoints.start(ms.toDS().groupByKey(_.event_type)
           .transformWithState(new CusumProcessor, TimeMode.None(),
             OutputMode.Update())
           .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Update).start()
+          .outputMode(OutputMode.Update))
         rows.grouped(math.max(rows.length / 4, 1)).foreach { c =>
           ms.addData(c.toIndexedSeq); q.processAllAvailable()
         }
@@ -1996,11 +1990,11 @@ object StreamingOps {
     try {
       import spark.implicits._
       val name = uniq("cdc_apply")
-      val q = cdcLog(spark, dir).as[CdcOp]
+      val q = Checkpoints.start(cdcLog(spark, dir).as[CdcOp]
         .groupByKey(_.user_id)
         .transformWithState(new CdcApplyProcessor, TimeMode.None(), OutputMode.Update())
         .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update).start()
+        .outputMode(OutputMode.Update))
       q.processAllAvailable(); q.stop()
       cdcSnapshot(spark.table(name))
     } finally {
@@ -2090,11 +2084,11 @@ object StreamingOps {
     try {
       import spark.implicits._
       val name = uniq("cdc_view")
-      val q = cdcLog(spark, dir).as[CdcOp]
+      val q = Checkpoints.start(cdcLog(spark, dir).as[CdcOp]
         .groupByKey(_.user_id)
         .transformWithState(new CdcViewProcessor, TimeMode.None(), OutputMode.Append())
         .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
+        .outputMode(OutputMode.Append))
       q.processAllAvailable(); q.stop()
       // the view merge: monoid-sum the retraction stream per group —
       // groups whose live count nets to zero leave the view
@@ -2193,13 +2187,13 @@ object StreamingOps {
         if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         else raw
-      val q = withTs
+      val q = Checkpoints.start(withTs
         .select(col("user_id").cast("long").as("user_id"),
           col("event_type"), unix_micros(col("ts")).as("us")).as[FEvent]
         .groupByKey(_.user_id)
         .transformWithState(new FunnelProcessor, TimeMode.None(), OutputMode.Update())
         .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update).start()
+        .outputMode(OutputMode.Update))
       q.processAllAvailable(); q.stop()
       funnelSnapshot(spark.table(name))
     } finally {
@@ -2255,7 +2249,7 @@ object StreamingOps {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Long, String, Long)]
     val ledger = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
-    val q = ms.toDS().toDF("event_id", "event_type", "cents")
+    val q = Checkpoints.start(ms.toDS().toDF("event_id", "event_type", "cents")
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val staged = s"$base/stage_$id"
@@ -2276,8 +2270,7 @@ object StreamingOps {
         val target = s"$base/$decision/part_$id"
         s.write.mode("overwrite").parquet(target)
         ledger.synchronized { ledger += ((id, decision, n, cents)); () }
-      }
-      .start()
+      })
     // one chunk per micro-batch: add, drain, repeat — chunk k is
     // exactly batch k, so the ledger keys deterministically
     (0 until 6).foreach { k =>
@@ -2360,7 +2353,7 @@ object StreamingOps {
       if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       else raw
-    val q = withTs
+    val q = Checkpoints.start(withTs
       .select(col("event_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"),
         (unix_micros(col("ts")) / 86400000000L).cast("long").as("day"))
@@ -2368,8 +2361,7 @@ object StreamingOps {
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         batch.write.mode("overwrite").parquet(s"$base/tail_$id")
-      }
-      .start()
+      })
     q.processAllAvailable(); q.stop()
     val backfill = spark.read.parquet(s"$base/backfill")
     val tail = spark.read.parquet(s"$base/tail_*")

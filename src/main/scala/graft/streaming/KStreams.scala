@@ -20,6 +20,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * state is O(1) (single latest record). A production deployment swaps
   * the file source for `format("kafka")` + the RocksDB state store
   * provider — one config line each, same topology code.
+  *
+  * Checkpoints: every query starts through [[Checkpoints.start]], so
+  * offset, commit and source logs and state-store files on a local path
+  * are written by [[LocalFirstCheckpointFileManager]] (Hadoop
+  * `FileSystem`, a plain rename). Spark's default `FileContext` manager
+  * forks `readlink` four times per rename when libhadoop is absent, as
+  * it is in a plain Spark install, and those forks cost more than a
+  * small micro-batch's own work. Checkpoints on HDFS or an object store
+  * keep Spark's default manager, and a manager the user configured is
+  * left alone, so the production swap above stays one config line each.
   */
 object KStreams {
 
@@ -64,11 +74,13 @@ object KStreams {
         new LatestRecordProcessor, TimeMode.None(), OutputMode.Update()))
     }
 
-    /** stream.to(topic) — append sink (parquet stands in for Kafka). */
+    /** stream.to(topic) — append sink (parquet stands in for Kafka).
+      * A local `checkpoint` is written fork-free by
+      * [[LocalFirstCheckpointFileManager]]; see [[Checkpoints.start]]. */
     def to(path: String, checkpoint: String): StreamingQuery =
-      ds.writeStream.format("parquet").option("path", path)
+      Checkpoints.start(ds.writeStream.format("parquet").option("path", path)
         .option("checkpointLocation", checkpoint)
-        .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()).start()
+        .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()))
   }
 
   /** State-v2 processor: keeps the latest record per key in a
@@ -109,10 +121,15 @@ object KStreams {
     /** table.toStream — the changelog is already a stream. */
     def toStream: KStreamDS = KStreamDS(ds)
     /** Materialize to a named in-memory table (interactive-query read
-      * side; the reference's watcher thread, KStreamsToKTable:152-167). */
+      * side; the reference's watcher thread, KStreamsToKTable:152-167).
+      * The query's temporary checkpoint, state store included, is
+      * written by [[LocalFirstCheckpointFileManager]] (see
+      * [[Checkpoints.start]]). Spark does not restart an update-mode
+      * memory sink from a checkpoint, so a table that must survive a
+      * restart writes its changelog to a checkpointed sink instead. */
     def toMemory(name: String): StreamingQuery =
-      ds.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update).start()
+      Checkpoints.start(ds.writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Update))
   }
 
   /** Current table state from an update-mode memory sink: the sink

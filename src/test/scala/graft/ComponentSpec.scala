@@ -184,11 +184,11 @@ class ComponentSpec extends AnyFunSuite {
     val (src, ckpt, sink) = (s"$base/src", s"$base/ckpt", s"$base/sink")
     def record(id: Long) = (id.toString, s"v$id", new java.sql.Timestamp(1700000000000L + id))
     def run(): Unit = {
-      val q = spark.readStream
+      val q = streaming.Checkpoints.start(spark.readStream
         .schema("key string, value string, ts timestamp").parquet(src)
         .writeStream.format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
+        .outputMode("append"))
       q.processAllAvailable(); q.stop()
     }
     (1L to 5L).map(record).toDF("key", "value", "ts")

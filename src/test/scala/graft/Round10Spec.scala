@@ -151,7 +151,7 @@ class Round10Spec extends AnyFunSuite {
     // sink before draining the new data.
     val base = util.scratchDir("e2e_exactly_once")
     def runQuery(rows: Long, out: String, ckpt: String): Unit = {
-      val q = spark.readStream.format("graft.sources.GraftRangeSource")
+      val q = streaming.Checkpoints.start(spark.readStream.format("graft.sources.GraftRangeSource")
         .option("rows", rows.toString).option("slices", "4").option("batchRows", "2500")
         .load()
         // dupkey folds ids ≥ 7500 onto the FIRST batch's keys: batch 3
@@ -163,7 +163,7 @@ class Round10Spec extends AnyFunSuite {
         .dropDuplicates("dupkey")
         .writeStream.format("graft.sources.GraftTextSink")
         .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
+        .outputMode("append"))
       q.processAllAvailable(); q.stop()
     }
     def readOut(out: String): Seq[String] = {

@@ -1,8 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.sources.MemoryPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming twins of the reference topology
   * (KStreamsToKTable.java:66-107): a keyed record stream is upserted
@@ -21,15 +25,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the file source for `format("kafka")` + the RocksDB state store
   * provider — one config line each, same topology code.
   *
+  * Interactive query: [[snapshot]] is a point-in-time read taken at the
+  * call. On a memory-sink table (`toMemory`) the sink's rows already
+  * live on the driver, so it runs no Spark job and breaks equal-`ts`
+  * ties by arrival, as `toTable` does; on any other table it runs a
+  * distributed latest-per-key aggregate.
+  *
   * Checkpoints: every query starts through [[Checkpoints.start]], so
   * offset, commit and source logs and state-store files on a local path
   * are written by [[LocalFirstCheckpointFileManager]] (Hadoop
   * `FileSystem`, a plain rename). Spark's default `FileContext` manager
   * forks `readlink` four times per rename when libhadoop is absent, as
-  * it is in a plain Spark install, and those forks cost more than a
-  * small micro-batch's own work. Checkpoints on HDFS or an object store
-  * keep Spark's default manager, and a manager the user configured is
-  * left alone, so the production swap above stays one config line each.
+  * it is in a plain Spark install, and Hadoop's local filesystem forks
+  * `chmod` once per created file and directory; those forks cost more
+  * than a small micro-batch's own work. The manager writes through a
+  * private [[ForkFreeLocalFileSystem]], which sets permissions without
+  * `chmod`. Checkpoints on HDFS or an object store keep Spark's default
+  * manager, and a manager or `fs.file.impl` the user configured is left
+  * alone, so the production swap above stays one config line each.
   */
 object KStreams {
 
@@ -122,8 +135,11 @@ object KStreams {
     def toStream: KStreamDS = KStreamDS(ds)
     /** Materialize to a named in-memory table (interactive-query read
       * side; the reference's watcher thread, KStreamsToKTable:152-167).
+      * [[snapshot]] of this table reads the sink's rows on the driver,
+      * without a Spark job. The sink keeps every update ever emitted
+      * (see the production note on [[snapshot]]).
       * The query's temporary checkpoint, state store included, is
-      * written by [[LocalFirstCheckpointFileManager]] (see
+      * written fork-free by [[LocalFirstCheckpointFileManager]] (see
       * [[Checkpoints.start]]). Spark does not restart an update-mode
       * memory sink from a checkpoint, so a table that must survive a
       * restart writes its changelog to a checkpointed sink instead. */
@@ -132,16 +148,30 @@ object KStreams {
         .outputMode(OutputMode.Update))
   }
 
-  /** Current table state from an update-mode memory sink: the sink
-    * holds every emitted update; latest-per-key of the updates IS the
-    * state-store content (upserts are monotone per key). Keys whose
-    * latest update is a null-value tombstone are deleted.
+  /** Current table state from a table's changelog, taken at the call
+    * (the reference's `store().all()`): latest row per key, keys whose
+    * latest update is a null-value tombstone deleted. Latest-per-key of
+    * the updates IS the state-store content (upserts are monotone per key).
+    *
+    * Which path runs depends on where the rows live. When every leaf of
+    * `spark.table(name)` is a memory sink (`toMemory`, or any
+    * `format("memory")` query), its rows already sit on the driver: they
+    * are collected without a Spark job, reduced in sink (arrival) order
+    * with [[KStreamDS.toTable]]'s own rule, a later row with `ts >=` the
+    * kept one replaces it, and returned as a local DataFrame. An
+    * equal-`ts` tie therefore goes to the later arrival, as in `toTable`.
+    * Any other table (a parquet changelog, a view) runs a distributed
+    * `max_by(…, ts)` per key. A generic table carries no arrival order,
+    * so there the winner of an equal-`ts` tie is unspecified. Rows with
+    * a null `ts` never win on either path. Both return `(key, value, ts)`
+    * with the table's column types.
     *
     * PRODUCTION NOTE — bounded memory: the memory sink retains the
     * FULL update history, so on a long-lived query this grows without
-    * bound. It is the right device for tests and short interactive
-    * sessions only. A production interactive-query read side keeps
-    * state bounded by maintaining the latest-per-key table itself:
+    * bound, and each snapshot scans all of it. It is the right device
+    * for tests and short interactive sessions only. A production
+    * interactive-query read side keeps state bounded by maintaining the
+    * latest-per-key table itself:
     * `writeStream.foreachBatch { (b, _) => b.groupBy("key").agg(
     * max_by(struct(value, ts), ts)) merged into a keyed parquet/Delta
     * table (or an upserted temp view) }` — per-batch size is the
@@ -149,10 +179,29 @@ object KStreams {
     * per key. The streaming incremental-dedup operator
     * (graft.operators.StreamingOps) demonstrates the same
     * state-stays-bounded discipline with transformWithState. */
-  def snapshot(spark: SparkSession, name: String): DataFrame =
-    spark.table(name)
+  def snapshot(spark: SparkSession, name: String): DataFrame = {
+    val table = spark.table(name)
+    if (table.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[MemoryPlan]))
+      latestOnDriver(spark, table)
+    else table
       .groupBy(col("key"))
       .agg(max_by(struct(col("value"), col("ts")), col("ts")).as("r"))
       .filter(col("r.value").isNotNull)
       .select(col("key"), col("r.value").as("value"), col("r.ts").as("ts"))
+  }
+
+  /** [[snapshot]] of a table whose rows live on the driver. */
+  private def latestOnDriver(spark: SparkSession, table: DataFrame): DataFrame = {
+    val cols = Seq("key", "value", "ts")
+    val Seq(k, v, t) = cols.map(table.schema.fieldIndex)
+    val latest = new java.util.LinkedHashMap[Any, Row]()
+    table.collect().foreach { r =>
+      val ts = r.get(t).asInstanceOf[Comparable[Any]]
+      val kept = latest.get(r.get(k))
+      if (ts != null && (kept == null || ts.compareTo(kept.get(2)) >= 0))
+        latest.put(r.get(k), Row(r.get(k), r.get(v), ts))
+    }
+    val rows = latest.values.asScala.filter(_.get(1) != null).toSeq
+    spark.createDataFrame(rows.asJava, StructType(cols.map(table.schema(_))))
+  }
 }

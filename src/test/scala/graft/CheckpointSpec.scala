@@ -1,24 +1,27 @@
 package graft
 
 import java.net.URI
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
-import graft.streaming.{Checkpoints, KStreams, LocalFirstCheckpointFileManager}
+import graft.streaming.{Checkpoints, ForkFreeLocalFileSystem, KStreams, LocalFirstCheckpointFileManager}
 import graft.streaming.KStreams.Record
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.NativeCodeLoader
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.streaming.checkpointing.{FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Streaming checkpoints: which manager writes them, what it forks, and
-  * that a stateful topology restarts from them exactly once. */
+/** Streaming checkpoints: which manager writes them, what it forks, the
+  * permissions it sets, and that a stateful topology restarts from them
+  * exactly once. */
 class CheckpointSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val key = Checkpoints.ManagerKey
@@ -39,10 +42,15 @@ class CheckpointSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1").parquet(src).as[Record])
   }
 
-  /** Commands of the child processes the JVM started while `body` ran. */
-  private def processStarts(body: => Unit): Seq[String] = {
+  /** A child process the JVM started: its command and the classes on its stack. */
+  private case class ProcessStart(command: String, stack: Seq[String]) {
+    def underManager: Boolean = stack.exists(_.contains("CheckpointFileManager"))
+  }
+
+  /** The child processes the JVM started while `body` ran. */
+  private def processStarts(body: => Unit): Seq[ProcessStart] = {
     val r = new Recording()
-    r.enable("jdk.ProcessStart")
+    r.enable("jdk.ProcessStart").withStackTrace()
     r.start()
     try body finally r.stop()
     val f = Files.createTempFile("graft_forks", ".jfr")
@@ -50,7 +58,8 @@ class CheckpointSpec extends AnyFunSuite {
       r.dump(f)
       RecordingFile.readAllEvents(f).asScala.toSeq
         .filter(_.getEventType.getName == "jdk.ProcessStart")
-        .map(_.getString("command"))
+        .map(e => ProcessStart(e.getString("command"),
+          Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala.map(_.getMethod.getType.getName))))
     } finally { r.close(); Files.deleteIfExists(f) }
   }
 
@@ -79,19 +88,62 @@ class CheckpointSpec extends AnyFunSuite {
       assert(spark.conf.get(key) == graftManager, "toMemory/to did not select the graft manager")
       forks
     }
-    val ourReadlinks = ours.count(_.contains("readlink"))
-    assert(ourReadlinks == 0, s"$ourReadlinks readlink forks, e.g. ${ours.find(_.contains("readlink"))}")
+    val ourReadlinks = ours.count(_.command.contains("readlink"))
+    assert(ourReadlinks == 0, s"$ourReadlinks readlink forks, e.g. ${ours.find(_.command.contains("readlink"))}")
+    // no chmod or any other child process from a checkpoint write either
+    val ourManagerForks = ours.filter(_.underManager)
+    assert(ourManagerForks.isEmpty,
+      s"${ourManagerForks.size} process starts under a CheckpointFileManager, e.g. ${ourManagerForks.headOption}")
     // control: Spark's default manager, chosen by the user, is kept and
-    // shows the readlink forks this recording can see
+    // shows the readlink forks this recording can see, with stacks deep
+    // enough to reach the manager
     val sparkDefault = classOf[FileContextBasedCheckpointFileManager].getName
     val theirs = withManager(Some(sparkDefault)) {
       val forks = processStarts(smallTopology("default"))
       assert(spark.conf.get(key) == sparkDefault, "a user-set manager was overwritten")
       forks
     }
-    if (!NativeCodeLoader.isNativeCodeLoaded)
-      assert(theirs.count(_.contains("readlink")) > 0,
+    if (!NativeCodeLoader.isNativeCodeLoaded) {
+      assert(theirs.count(_.command.contains("readlink")) > 0,
         s"the control run recorded no readlink forks (${theirs.size} process starts)")
+      assert(theirs.exists(_.underManager),
+        s"no control process start has a CheckpointFileManager on its stack (${theirs.size} process starts)")
+    }
+  }
+
+  test("file: checkpoint files and directories get chmod's mode without chmod; a user-set fs.file.impl is kept") {
+    val conf = new Configuration()
+    conf.set("fs.permissions.umask-mode", "027") // not the JVM's own umask
+    val umask = FsPermission.getUMask(conf)
+    val (wantFile, wantDir) = (FsPermission.getFileDefault.applyUMask(umask), FsPermission.getDirDefault.applyUMask(umask))
+    assert((wantFile.toString, wantDir.toString) == ("rw-r-----", "rwxr-x---"))
+    val base = util.scratchDir("ckpt_modes")
+    def write(root: String, c: Configuration): Seq[ProcessStart] = processStarts {
+      val m: CheckpointFileManager = new LocalFirstCheckpointFileManager(new Path(root), c)
+      m.mkdirs(new Path(s"$root/d/e"))
+      val out = m.createAtomic(new Path(s"$root/d/e/f"), overwriteIfPossible = false)
+      out.write(1); out.close()
+    }
+    def mode(p: String) = PosixFilePermissions.toString(Files.getPosixFilePermissions(Paths.get(p)))
+    def modes(root: String) = Seq("d", "d/e", "d/e/f", "d/e/.f.crc").map(f => f -> mode(s"$root/$f"))
+    val want = Seq("d" -> wantDir, "d/e" -> wantDir, "d/e/f" -> wantFile, "d/e/.f.crc" -> wantFile)
+      .map { case (f, p) => f -> p.toString }
+
+    val ours = s"$base/graft"
+    val oursForks = write(ours, conf).filter(_.underManager)
+    assert(oursForks.isEmpty, s"process starts under the manager: $oursForks")
+    assert(modes(ours) == want)
+
+    // the user names Hadoop's own local filesystem, which sets modes with chmod
+    val user = new Configuration(conf)
+    user.set(Checkpoints.FileImplKey, classOf[LocalFileSystem].getName)
+    user.setBoolean("fs.file.impl.disable.cache", true)
+    assert(Checkpoints.forkFreeLocal(user) eq user)
+    val theirs = s"$base/hadoop"
+    val theirForks = write(theirs, user).filter(_.underManager)
+    assert(modes(theirs) == want, "the fork-free modes differ from chmod's")
+    if (!NativeCodeLoader.isNativeCodeLoaded)
+      assert(theirForks.exists(_.command.contains("chmod")), "the user's fs.file.impl was not used")
   }
 
   test("LocalFirstCheckpointFileManager: FileSystem for file paths, Spark's default elsewhere") {
@@ -106,8 +158,9 @@ class CheckpointSpec extends AnyFunSuite {
     conf.set("fs.AbstractFileSystem.graftfs.impl", classOf[GraftTestFs].getName)
     val other = new LocalFirstCheckpointFileManager(new Path("graftfs:///ck"), conf)
     assert(other.delegate.isInstanceOf[FileContextBasedCheckpointFileManager], s"got ${other.delegate}")
-    // the caller's conf is not edited
+    // the caller's conf is not edited, and the cached local FileSystem is not the manager's
     assert(conf.get(key) == graftManager)
+    assert(!new Path(dir).getFileSystem(conf).isInstanceOf[ForkFreeLocalFileSystem])
   }
 
   /** Latest-per-key table changes, one batch per file: what `toTable`
@@ -165,7 +218,9 @@ class CheckpointSpec extends AnyFunSuite {
     assert(got.toSet == expectedChangelog(files), "restarted table lost or replayed state")
     val view = if (tornCommit) "ckpt_restart_torn_log" else "ckpt_restart_log"
     changelog.createOrReplaceTempView(view)
-    val snap = KStreams.snapshot(spark, view).as[Record].collect().toSet
+    var snap = Set.empty[Record]
+    // a parquet changelog's rows do not live on the driver: distributed path
+    assert(TestSpark.jobsDuring { snap = KStreams.snapshot(spark, view).as[Record].collect().toSet } > 0)
     val want = files.flatten.groupBy(_.key).values.map(_.maxBy(_.ts.getTime)).toSet
     assert(snap == want)
     val out = spark.read.parquet(sink).as[Record].collect().toSeq

@@ -55,6 +55,66 @@ class StreamingSpec extends AnyFunSuite {
     assert(s2 == Set.empty[String])
   }
 
+  /** `snapshot` of memory table `name` (job-free), checked against the
+    * distributed aggregate over a parquet copy of the same sink rows. The
+    * copy carries no arrival order, so its winner of an equal-`ts` tie is
+    * unspecified: on `tieKey` the memory path must return the later
+    * arrival `later` and the copy one of `tied`. */
+  private def checkSnapshot(name: String, tieKey: String, later: String, tied: Set[String]): Map[String, (String, Timestamp)] = {
+    import spark.implicits._
+    var driver = Map.empty[String, (String, Timestamp)]
+    val jobs = TestSpark.jobsDuring {
+      val snap = KStreams.snapshot(spark, name)
+      driver = snap.as[(String, String, Timestamp)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    }
+    assert(jobs == 0, s"a memory-table snapshot ran $jobs Spark jobs")
+    val copy = s"${util.scratchDir(s"snap_$name")}/sink"
+    spark.table(name).write.parquet(copy)
+    spark.read.parquet(copy).createOrReplaceTempView(s"${name}_copy")
+    val distributed = KStreams.snapshot(spark, s"${name}_copy")
+    assert(distributed.schema.map(f => f.name -> f.dataType) ==
+      KStreams.snapshot(spark, name).schema.map(f => f.name -> f.dataType))
+    val dist = distributed.as[(String, String, Timestamp)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(driver(tieKey)._1 == later, s"the equal-ts tie went to ${driver(tieKey)}")
+    assert(tied.contains(dist(tieKey)._1))
+    assert(driver - tieKey == dist - tieKey)
+    driver
+  }
+
+  test("snapshot of a toMemory table runs no Spark job; a cross-batch equal-ts tie goes to the later arrival") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val ms = MemoryStream[Record]
+    val q = KStreams.KStreamDS(ms.toDS()).toTable.toMemory("t_snap_table")
+    val t0 = ts("2024-01-01 10:00:00")
+    ms.addData(Record("a", "a1", t0), Record("b", "b1", t0), Record("c", "c1", t0))
+    q.processAllAvailable()
+    // a: same ts in a later batch (toTable keeps the later arrival);
+    // b: older, so no change; c: a tombstone; d: new
+    ms.addData(Record("a", "a2", t0), Record("b", "b0", ts("2024-01-01 09:00:00")),
+               Record("c", null, ts("2024-01-01 11:00:00")), Record("d", "d1", ts("2024-01-01 11:00:00")))
+    q.processAllAvailable(); q.stop()
+    val got = checkSnapshot("t_snap_table", "a", "a2", Set("a1", "a2"))
+    assert(got == Map("a" -> ("a2", t0), "b" -> ("b1", t0), "d" -> ("d1", ts("2024-01-01 11:00:00"))))
+  }
+
+  test("snapshot of a format(memory) table runs no Spark job and keeps the latest row per key in sink order") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val ms = MemoryStream[Record]
+    // the raw records, as streamAvailableNowReplay writes its changelog
+    val q = ms.toDS().writeStream.format("memory").queryName("t_snap_raw").outputMode("append").start()
+    val (t0, t1) = (ts("2024-01-01 10:00:00"), ts("2024-01-01 10:05:00"))
+    ms.addData(Record("x", "x1", t0), Record("y", "y1", t0), Record("z", "z1", t1))
+    q.processAllAvailable()
+    ms.addData(Record("y", null, t1), Record("x", "x2", t0), Record("z", "z0", t0))
+    q.processAllAvailable()
+    ms.addData(Record("x", "x3", t0))
+    q.processAllAvailable(); q.stop()
+    val got = checkSnapshot("t_snap_raw", "x", "x3", Set("x1", "x2", "x3"))
+    assert(got == Map("x" -> ("x3", t0), "z" -> ("z1", t1)))
+  }
+
   test("table.mapValues + toStream compose on the changelog") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext

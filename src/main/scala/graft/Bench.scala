@@ -365,7 +365,14 @@ object Bench {
     // per graph fingerprint; betweenness times its backward phase,
     // the other two time group-bys over the artifact
     "graph_betweenness", "graph_harmonic_centrality",
-    "graph_effective_diameter")
+    "graph_effective_diameter",
+    // the streamed near-dup candidates verify against the persisted
+    // dedup-graph shingles and signatures (Dedup.verifyCandidates)
+    "stream_neardup_minhash",
+    // these graph readers read the trade graph (Graph.tradeGraphRoot),
+    // keyed by the (orders, lineitem) fingerprints, once it is built
+    "graph_assortativity", "graph_degree_histogram", "graph_rich_club",
+    "graph_powerlaw_alpha", "graph_ktruss", "graph_hits", "graph_ego_sample")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -405,21 +412,7 @@ object Bench {
     // run overwrites BENCH_DETAIL.json at exit): these drive the
     // post-pass per-query requote and the live sentinel pins
     val priorPins = priorQuietPins()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // driver testdata is parquet timestamp[us] with no UTC flag: read it as
-      // session-zone (UTC) TimestampType, not NTZ — watermarks/unix_micros/as-of
-      // require TimestampType and every oracle was defined on UTC wall-clock
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse_bench")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(cpus, "bench")
     spark.sparkContext.setLogLevel("WARN")
     // oracle sidecars are correctness-harness artifacts (DuckDB replay
     // inputs), not part of any operator's serving path — skip their

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.Harness.jsonString
 
 /** Dev harness: run NAMED registry entries against one SF dir and dump
   * each result to parquet — the fast inner loop for checking a single
@@ -12,20 +12,7 @@ object DevRun {
     val outDir = args(1)
     val names = args.drop(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // driver testdata is parquet timestamp[us] with no UTC flag: read it as
-      // session-zone (UTC) TimestampType, not NTZ — watermarks/unix_micros/as-of
-      // require TimestampType and every oracle was defined on UTC wall-clock
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse_dev")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(cpus, "dev")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
@@ -36,17 +23,8 @@ object DevRun {
     }
     // oracle_sql.json for the selected names, so tools/check.py works
     // on a DevRun dump exactly as on a full Verify dump
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.view.filterKeys(names.contains)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -98,6 +98,19 @@ object util {
   def materializeLocal(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
 
+  /** Run `body` with `confs` set on the session, then restore each key
+    * to its prior value, or unset it if it had none, also when `body`
+    * throws. Confs read at planning time only hold for plans that
+    * execute inside the scope (see [[materializeLocal]]). */
+  def withConfs[A](spark: SparkSession, confs: Seq[(String, String)])(body: => A): A = {
+    val prev = confs.map { case (c, _) => c -> spark.conf.getOption(c) }
+    confs.foreach { case (c, v) => spark.conf.set(c, v) }
+    try body finally prev.foreach {
+      case (c, Some(v)) => spark.conf.set(c, v)
+      case (c, None) => spark.conf.unset(c)
+    }
+  }
+
   /** Recursively delete a directory tree (no-op on missing paths). */
   def deleteRecursively(f: java.io.File): Unit = {
     val kids = f.listFiles()

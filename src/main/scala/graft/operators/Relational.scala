@@ -948,18 +948,14 @@ object Relational {
     * rule-on ≡ rule-off equivalence, plan shape, and empty-interval
     * guard are spec-asserted, and the result hash-matches the same
     * naive SQL in DuckDB. */
-  def q68AutoRangeJoin(spark: SparkSession, dir: String): DataFrame = {
-    val key = "spark.graft.autoRangeJoin.binWidth"
-    val capKey = "spark.graft.autoRangeJoin.maxBinsPerRow"
-    val prev = spark.conf.getOption(key)
-    val prevCap = spark.conf.getOption(capKey)
-    spark.conf.set(key, "3600")
+  def q68AutoRangeJoin(spark: SparkSession, dir: String): DataFrame =
     // the attribution windows are FIXED 2-hour intervals — every row
     // spans 2–3 bins at w=3600 by construction, so this entry arms the
     // no-fallback expert mode (pure binned plan, no second scan pair);
     // the default wide-interval split is spec-covered in Round7Spec
-    spark.conf.set(capKey, "-1")
-    try {
+    withConfs(spark, Seq(
+        "spark.graft.autoRangeJoin.binWidth" -> "3600",
+        "spark.graft.autoRangeJoin.maxBinsPerRow" -> "-1")) {
       val ev = t(spark, dir, "events")
       val periods = ev
         .filter(col("event_type") === "purchase" && col("event_id") % 20 === 0)
@@ -975,17 +971,7 @@ object Relational {
       val out = scratchDir("q68_auto_range")
       joined.write.parquet(out) // executes while the rule is armed
       spark.read.parquet(out).orderBy(col("period_id"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      prevCap match {
-        case Some(v) => spark.conf.set(capKey, v)
-        case None => spark.conf.unset(capKey)
-      }
     }
-  }
 
   val q68Sql: String =
     """WITH periods AS (

@@ -318,15 +318,6 @@ object SqlSurface {
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
 
-  def withConfs[A](spark: SparkSession, confs: Seq[(String, String)])(body: => A): A = {
-    val prev = confs.map { case (c, _) => c -> spark.conf.getOption(c) }
-    confs.foreach { case (c, v) => spark.conf.set(c, v) }
-    try body finally prev.foreach {
-      case (c, Some(v)) => spark.conf.set(c, v)
-      case (c, None) => spark.conf.unset(c)
-    }
-  }
-
   /** The bare skewed join under the scoped confs (spec asserts its
     * executed plan contains the skew split). */
   def q57Join(spark: SparkSession, lPath: String, rPath: String): DataFrame =

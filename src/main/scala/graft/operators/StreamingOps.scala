@@ -1,11 +1,12 @@
 package graft.operators
 
-import graft.GQuery
+import graft.{GQuery, util}
 import graft.streaming.{Checkpoints, KStreams}
 import graft.streaming.KStreams.Record
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.types.LongType
 
 /** Oracle-verified Structured Streaming runs: each query executes a
   * real streaming pipeline over the events parquet (readStream →
@@ -14,47 +15,71 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, S
   * DuckDB oracle. This is the strongest possible check of the
   * reference's stream→table semantics: the streaming state machine
   * converges to exactly the relational answer.
+  *
+  * Every entry runs under one discipline:
+  *  - State is partitioned 8 ways ([[StateConfs]]). A query's state is
+  *    partitioned by `spark.sql.shuffle.partitions` at its first
+  *    checkpoint and pinned thereafter, so this is a sizing decision,
+  *    not a semantic one: at sf0.1/local[32] the stream-stream join ran
+  *    11.2 s with 32 state partitions and 3.8 s with 8, with identical
+  *    results. A 100 TB ingest sizes it to throughput instead.
+  *  - Only state-v2 (`transformWithState`) entries add the RocksDB
+  *    provider ([[RocksDb]]), which state v2 requires; the session
+  *    default stays HDFS-backed. Both confs are scoped by
+  *    [[graft.util.withConfs]] and restored after the entry.
+  *  - A started query is always stopped: [[drain]] stops it in a
+  *    `finally`, so a throwing feed or driver-side step cannot leave it
+  *    running into the next entry.
+  *  - A memory sink is read after its query has stopped.
   */
 object StreamingOps {
 
   private def uniq(prefix: String): String =
     s"${prefix}_${java.util.UUID.randomUUID.toString.replace("-", "")}"
 
-  /** State partition count for the streaming runs. A streaming query's
-    * state is partitioned by `spark.sql.shuffle.partitions` AT FIRST
-    * CHECKPOINT and pinned thereafter — it is a deployment sizing
-    * decision (state-store instances × per-instance setup/commit cost
-    * vs parallelism), not a semantic one. The bench streams are
-    * bounded test data where 32 store instances are pure overhead:
-    * measured at sf0.1/local[32], the stream-stream join runs 11.2 s
-    * with 32 state partitions and 3.8 s with 8, identical results. A
-    * 100 TB ingest sizes this to throughput (hundreds); these runs
-    * size it to the test stream. The conf is set around the streaming
-    * run and restored after, like the RocksDB provider conf. */
-  private val statePartitions = 8
+  private[graft] val StateConfs: Seq[(String, String)] =
+    Seq("spark.sql.shuffle.partitions" -> "8")
 
-  private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, statePartitions.toString)
-    try body finally spark.conf.set(key, prev)
+  private[graft] val RocksDb: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Table `table` of the sf dir as a parquet file stream. The file
+    * source wants a directory, so it streams `dir` glob-limited to the
+    * table; a nanosecond `ts` gets the ns→µs conversion of graft.util.t. */
+  private def fileStream(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val schema = spark.read.parquet(s"$dir/$table.parquet").schema
+    val raw = spark.readStream.schema(schema)
+      .option("pathGlobFilter", s"$table.parquet").parquet(dir)
+    if (schema.exists(f => f.name == "ts" && f.dataType == LongType))
+      raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    else raw
+  }
+
+  /** Run `q` until it has processed all available input, once after
+    * each of `feeds` (a step that adds one micro-batch's data, such as
+    * a `MemoryStream.addData`) or once when there are none, then stop
+    * it, also when a batch or a feed throws. */
+  private def drain(q: StreamingQuery, feeds: Seq[() => Any] = Nil): Unit =
+    try {
+      if (feeds.isEmpty) q.processAllAvailable()
+      else feeds.foreach { feed => feed(); q.processAllAvailable() }
+    } finally q.stop()
+
+  /** Run `ds` into a fresh memory sink, [[drain]] it and return the
+    * sink's table. */
+  private[graft] def drainToMemory(ds: Dataset[_], prefix: String, mode: OutputMode,
+      feeds: Seq[() => Any] = Nil): DataFrame = {
+    val name = uniq(prefix)
+    drain(Checkpoints.start(ds.writeStream.format("memory").queryName(name).outputMode(mode)), feeds)
+    ds.sparkSession.table(name)
   }
 
   /** events.parquet as a streaming Dataset[Record] (key = user_id,
-    * value = event_type), with the ns→µs conversion of graft.util.t. */
+    * value = event_type). */
   private def recordStream(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    // the file source wants a directory: stream the sf dir, glob-limited
-    // to the events table
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val withTs =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
-    withTs.select(
+    fileStream(spark, dir, "events").select(
       col("user_id").cast("string").as("key"),
       col("event_type").as("value"),
       col("ts")).as[Record]
@@ -62,10 +87,9 @@ object StreamingOps {
 
   /** R2 streaming — stream.toTable via flatMapGroupsWithState (update
     * mode), interactive-query snapshot of the converged state. */
-  def latestPerKey(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def latestPerKey(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     val name = uniq("latest_state")
-    val q = KStreams.KStreamDS(recordStream(spark, dir)).toTable.toMemory(name)
-    q.processAllAvailable(); q.stop()
+    drain(KStreams.KStreamDS(recordStream(spark, dir)).toTable.toMemory(name))
     KStreams.snapshot(spark, name).orderBy(col("key"))
   }
 
@@ -78,13 +102,12 @@ object StreamingOps {
 
   /** R4 streaming — filtered KTable (latest state where the value
     * says 'purchase'), last-state-wins read side. */
-  def filteredTable(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def filteredTable(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     val name = uniq("filtered_state")
-    val q = KStreams.KStreamDS(recordStream(spark, dir))
+    drain(KStreams.KStreamDS(recordStream(spark, dir))
       .toTable
       .filter(lower(col("value")) === "purchase")
-      .toMemory(name)
-    q.processAllAvailable(); q.stop()
+      .toMemory(name))
     // tombstones retract keys that left the filtered view; snapshot
     // drops them, so this is exactly the filter over the final table
     KStreams.snapshot(spark, name).orderBy(col("key"))
@@ -100,16 +123,12 @@ object StreamingOps {
 
   /** Streaming tumbling-window aggregation with watermark, complete
     * output mode → converged counts equal the batch answer. */
-  def windowedCounts(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val name = uniq("win_counts")
-    val q = Checkpoints.start(recordStream(spark, dir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("value"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete))
-    q.processAllAvailable(); q.stop()
-    spark.table(name)
+  def windowedCounts(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
+    drainToMemory(recordStream(spark, dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("value"))
+        .agg(count(lit(1)).as("n")),
+      "win_counts", OutputMode.Complete)
       .select(col("window.start").as("w_start"), col("value"), col("n"))
       .orderBy(col("w_start"), col("value"))
   }
@@ -122,15 +141,12 @@ object StreamingOps {
   /** Streaming deduplication (dropDuplicates on the full key) —
     * first-arrival wins; the distinct key set equals the batch
     * DISTINCT regardless of arrival order. */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val name = uniq("dedup_stream")
-    val q = Checkpoints.start(recordStream(spark, dir)
-      .dropDuplicates("key", "value")
-      .select(col("key"), col("value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append))
-    q.processAllAvailable(); q.stop()
-    spark.table(name).orderBy(col("key"), col("value"))
+  def streamDedup(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
+    drainToMemory(recordStream(spark, dir)
+        .dropDuplicates("key", "value")
+        .select(col("key"), col("value")),
+      "dedup_stream", OutputMode.Append)
+      .orderBy(col("key"), col("value"))
   }
 
   val streamDedupSql: String =
@@ -144,16 +160,13 @@ object StreamingOps {
     * state is a leak; this is the production variant. The whole events
     * file arrives in one micro-batch here, so the result still equals
     * batch DISTINCT exactly. */
-  def streamDedupWm(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val name = uniq("dedup_wm_stream")
-    val q = Checkpoints.start(recordStream(spark, dir)
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("key", "value")
-      .select(col("key"), col("value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append))
-    q.processAllAvailable(); q.stop()
-    spark.table(name).orderBy(col("key"), col("value"))
+  def streamDedupWm(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
+    drainToMemory(recordStream(spark, dir)
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark("key", "value")
+        .select(col("key"), col("value")),
+      "dedup_wm_stream", OutputMode.Append)
+      .orderBy(col("key"), col("value"))
   }
 
   val streamDedupWmSql: String = streamDedupSql
@@ -161,19 +174,15 @@ object StreamingOps {
   /** Stream-static join: the event stream enriched against a static
     * dimension (customer segment per user) — the dimension is
     * broadcast per micro-batch, the stream side never shuffles. */
-  def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val name = uniq("enriched_stream")
+  def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     val dim = graft.util.t(spark, dir, "customer")
       .filter(col("c_custkey") < 150)
       .select(col("c_custkey").cast("string").as("key"),
         col("c_mktsegment").as("segment"))
-    val q = Checkpoints.start(recordStream(spark, dir)
-      .join(broadcast(dim), Seq("key"))
-      .select(col("key"), col("value"), col("ts"), col("segment"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append))
-    q.processAllAvailable(); q.stop()
-    spark.table(name)
+    drainToMemory(recordStream(spark, dir)
+        .join(broadcast(dim), Seq("key"))
+        .select(col("key"), col("value"), col("ts"), col("segment")),
+      "enriched_stream", OutputMode.Append)
       .groupBy(col("segment"), col("value"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("segment"), col("value"))
@@ -190,8 +199,7 @@ object StreamingOps {
     * preceding hour. Both sides carry watermarks so the join state is
     * BOUNDED — Spark evicts click state older than the watermark minus
     * the range; without this, stream-stream join state grows forever. */
-  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val name = uniq("ss_join")
+  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     val clicks = recordStream(spark, dir)
       .filter(col("value") === "click")
       .select(col("key"), col("ts").as("click_ts"))
@@ -200,15 +208,12 @@ object StreamingOps {
       .filter(col("value") === "purchase")
       .select(col("key").as("p_key"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "2 hours")
-    val q = Checkpoints.start(purchases.join(clicks,
-        col("key") === col("p_key") &&
-        col("click_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("click_ts") <= col("p_ts"))
-      .select(col("p_key").as("user_key"), col("p_ts"), col("click_ts"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append))
-    q.processAllAvailable(); q.stop()
-    spark.table(name)
+    drainToMemory(purchases.join(clicks,
+          col("key") === col("p_key") &&
+          col("click_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+          col("click_ts") <= col("p_ts"))
+        .select(col("p_key").as("user_key"), col("p_ts"), col("click_ts")),
+      "ss_join", OutputMode.Append)
       .groupBy(col("user_key"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy(col("user_key"))
@@ -278,8 +283,7 @@ object StreamingOps {
   }
 
   /** Latest-per-key with TTL EVICTION — `transformWithState` +
-    * `TimeMode.EventTime` + registered timers (RocksDB provider, same
-    * conf discipline as the other state-v2 runs). The stream carries a
+    * `TimeMode.EventTime` + registered timers. The stream carries a
     * zero-delay watermark, so after the data batch the watermark jumps
     * to max(ts) and Spark runs a no-data micro-batch that fires every
     * timer older than it: keys idle for ≥ 6 h of event time are
@@ -287,39 +291,27 @@ object StreamingOps {
     * batch latest-per-key oracle under the same recency cutoff
     * (`latest_ts > max_ts - 6 h` — boundary keys verified ≥ 3 s away
     * at all SFs, so ms-vs-µs truncation cannot flip a row). */
-  def ttlLatestPerKey(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      val name = uniq("ttl_latest")
-      val q = Checkpoints.start(recordStream(spark, dir)
+  def ttlLatestPerKey(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs :+ RocksDb) {
+    import spark.implicits._
+    // converged table = latest upsert per key, minus keys whose
+    // eviction tombstone came after every upsert (in this bounded
+    // run all upserts land in the data batch and all tombstones in
+    // the timer batch, so any tombstoned key is gone)
+    val updates = drainToMemory(recordStream(spark, dir)
         .withWatermark("ts", "0 seconds")
         .groupByKey(_.key)
-        .transformWithState(new TtlLatestProcessor, TimeMode.EventTime(), OutputMode.Update())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update))
-      q.processAllAvailable(); q.stop()
-      // converged table = latest upsert per key, minus keys whose
-      // eviction tombstone came after every upsert (in this bounded
-      // run all upserts land in the data batch and all tombstones in
-      // the timer batch, so any tombstoned key is gone)
-      val updates = spark.table(name)
-      // toDF mints fresh attribute ids — both sides read the same
-      // memory table, so a bare self-join would conflict
-      val evictedKeys = updates.filter(col("evicted"))
-        .select(col("key")).distinct().toDF("ekey")
-      updates.filter(!col("evicted"))
-        .groupBy(col("key"))
-        .agg(max_by(struct(col("value"), col("ts")), col("ts")).as("r"))
-        .join(evictedKeys, col("key") === col("ekey"), "left_anti")
-        .select(col("key"), col("r.value").as("value"), col("r.ts").as("ts"))
-        .orderBy(col("key"))
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
+        .transformWithState(new TtlLatestProcessor, TimeMode.EventTime(), OutputMode.Update()),
+      "ttl_latest", OutputMode.Update)
+    // toDF mints fresh attribute ids — both sides read the same
+    // memory table, so a bare self-join would conflict
+    val evictedKeys = updates.filter(col("evicted"))
+      .select(col("key")).distinct().toDF("ekey")
+    updates.filter(!col("evicted"))
+      .groupBy(col("key"))
+      .agg(max_by(struct(col("value"), col("ts")), col("ts")).as("r"))
+      .join(evictedKeys, col("key") === col("ekey"), "left_anti")
+      .select(col("key"), col("r.value").as("value"), col("r.ts").as("ts"))
+      .orderBy(col("key"))
   }
 
   /** The batch twin: latest per key, kept only when the key's latest
@@ -407,54 +399,47 @@ object StreamingOps {
     * the run; the driver-side sample is 1/20th of events at test SFs
     * — the PROCESSOR is corpus-scale, state holds one record per
     * key. */
-  def streamPunctuateSnapshot(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  def streamPunctuateSnapshot(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs :+ RocksDb) {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val cp = graft.util.scratchDir("punct_cp")
+    // deterministic 1/20 sample; event_id rides along as the seq so
+    // the processor's (ts, seq) winner matches the oracle's
+    // (ts DESC, event_id DESC) winner under ANY delivery order
+    val sample = graft.util.t(spark, dir, "events")
+      .filter(col("event_id") % 20 === 0)
+      .orderBy(col("ts"), col("event_id"))
+      .select(col("user_id").cast("string").as("key"),
+        col("event_type").as("value"), col("ts"),
+        col("event_id").cast("long").as("seq"))
+      .as[SeqRecord].collect().toSeq
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val nKeys = sample.map(_.key).distinct.size
+    val ms = MemoryStream[SeqRecord]
+    val name = uniq("punctuate")
+    val q = Checkpoints.start(ms.toDS().groupByKey(_.key)
+      .transformWithState(new ProcTtlProcessor(400L),
+        TimeMode.ProcessingTime(), OutputMode.Update())
+      .writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", cp)
+      .outputMode(OutputMode.Update))
+    ms.addData(sample)
+    // the engine self-schedules batches; converged = every key
+    // evicted exactly once (all data arrived in one batch, so no
+    // timer can re-arm after its eviction)
+    val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
+    def evictedCount(): Long =
+      spark.table(name).filter(col("evicted")).count()
     try {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import spark.implicits._
-      val cp = graft.util.scratchDir("punct_cp")
-      // deterministic 1/20 sample; event_id rides along as the seq so
-      // the processor's (ts, seq) winner matches the oracle's
-      // (ts DESC, event_id DESC) winner under ANY delivery order
-      val sample = graft.util.t(spark, dir, "events")
-        .filter(col("event_id") % 20 === 0)
-        .orderBy(col("ts"), col("event_id"))
-        .select(col("user_id").cast("string").as("key"),
-          col("event_type").as("value"), col("ts"),
-          col("event_id").cast("long").as("seq"))
-        .as[SeqRecord].collect().toSeq
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val nKeys = sample.map(_.key).distinct.size
-      val ms = MemoryStream[SeqRecord]
-      val name = uniq("punctuate")
-      val q = Checkpoints.start(ms.toDS().groupByKey(_.key)
-        .transformWithState(new ProcTtlProcessor(400L),
-          TimeMode.ProcessingTime(), OutputMode.Update())
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", cp)
-        .outputMode(OutputMode.Update))
-      ms.addData(sample)
-      // the engine self-schedules batches; converged = every key
-      // evicted exactly once (all data arrived in one batch, so no
-      // timer can re-arm after its eviction)
-      val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
-      def evictedCount(): Long =
-        spark.table(name).filter(col("evicted")).count()
       while (evictedCount() < nKeys && System.nanoTime < deadline)
         Thread.sleep(100L)
-      q.stop()
-      require(evictedCount() == nKeys,
-        s"punctuator timers did not all fire: ${evictedCount()} of $nKeys")
-      spark.table(name)
-        .filter(col("evicted"))
-        .select(col("key"), col("value"), col("ts"))
-        .orderBy(col("key"))
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
+    } finally q.stop()
+    require(evictedCount() == nKeys,
+      s"punctuator timers did not all fire: ${evictedCount()} of $nKeys")
+    spark.table(name)
+      .filter(col("evicted"))
+      .select(col("key"), col("value"), col("ts"))
+      .orderBy(col("key"))
   }
 
   /** Eviction snapshots carry the latest record per key, so the oracle
@@ -483,8 +468,7 @@ object StreamingOps {
     * margin below the 1-hour join range, clear of either possible
     * state-watermark formula. The cutoff is computed from the static
     * table at full µs precision so both engines filter identically. */
-  def streamStreamJoinOuter(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val name = uniq("ss_join_outer")
+  def streamStreamJoinOuter(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     val clicks = recordStream(spark, dir)
       .filter(col("value") === "click")
       .select(col("key"), col("ts").as("click_ts"))
@@ -493,15 +477,13 @@ object StreamingOps {
       .filter(col("value") === "purchase")
       .select(col("key").as("p_key"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "0 seconds")
-    val q = Checkpoints.start(purchases.join(clicks,
-        col("key") === col("p_key") &&
-        col("click_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("click_ts") <= col("p_ts"),
-      "leftOuter")
-      .select(col("p_key").as("user_key"), col("p_ts"), col("click_ts"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append))
-    q.processAllAvailable(); q.stop()
+    val pairs = drainToMemory(purchases.join(clicks,
+          col("key") === col("p_key") &&
+          col("click_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+          col("click_ts") <= col("p_ts"),
+        "leftOuter")
+        .select(col("p_key").as("user_key"), col("p_ts"), col("click_ts")),
+      "ss_join_outer", OutputMode.Append)
     // µs-exact cutoff keyed off the watermark the stream actually
     // REACHES — the global watermark is the MIN across the two inputs'
     // event-time maxima (multipleWatermarkPolicy=min), so a corpus
@@ -513,7 +495,7 @@ object StreamingOps {
         max(when(col("event_type") === "purchase", col("ts"))).as("mp")).first()
     val wm0 = Seq(b0.getTimestamp(0), b0.getTimestamp(1)).minBy(_.getTime)
     val cutoff = java.sql.Timestamp.from(wm0.toInstant.minusSeconds(2 * 3600))
-    spark.table(name)
+    pairs
       .filter(col("p_ts") <= lit(cutoff))
       .groupBy(col("user_key"))
       .agg(count(col("click_ts")).as("n_pairs"),
@@ -544,8 +526,7 @@ object StreamingOps {
     * final watermark, so the batch FULL JOIN oracle matches exactly —
     * the same cutoff discipline as the left-outer entry, applied
     * symmetrically. */
-  def streamStreamJoinFull(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val name = uniq("ss_join_full")
+  def streamStreamJoinFull(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     val clicks = recordStream(spark, dir)
       .filter(col("value") === "click")
       .select(col("key"), col("ts").as("click_ts"))
@@ -554,16 +535,14 @@ object StreamingOps {
       .filter(col("value") === "purchase")
       .select(col("key").as("p_key"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "0 seconds")
-    val q = Checkpoints.start(purchases.join(clicks,
-        col("key") === col("p_key") &&
-        col("click_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("click_ts") <= col("p_ts"),
-      "fullOuter")
-      .select(coalesce(col("p_key"), col("key")).as("user_key"),
-        col("p_ts"), col("click_ts"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append))
-    q.processAllAvailable(); q.stop()
+    val pairs = drainToMemory(purchases.join(clicks,
+          col("key") === col("p_key") &&
+          col("click_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+          col("click_ts") <= col("p_ts"),
+        "fullOuter")
+        .select(coalesce(col("p_key"), col("key")).as("user_key"),
+          col("p_ts"), col("click_ts")),
+      "ss_join_full", OutputMode.Append)
     // the global watermark is the MIN across the two inputs' event-time
     // maxima (multipleWatermarkPolicy=min) — the last click/purchase is
     // never closed, so the cutoff must key off the watermark the stream
@@ -575,7 +554,7 @@ object StreamingOps {
         max(when(col("event_type") === "purchase", col("ts"))).as("mp")).first()
     val wm = Seq(b.getTimestamp(0), b.getTimestamp(1)).minBy(_.getTime)
     val cutoff = java.sql.Timestamp.from(wm.toInstant.minusSeconds(2 * 3600))
-    spark.table(name)
+    pairs
       .filter(coalesce(col("p_ts"), col("click_ts")) <= lit(cutoff))
       .groupBy(col("user_key"))
       .agg(count(lit(1)).as("n_rows"),
@@ -606,23 +585,11 @@ object StreamingOps {
       |GROUP BY 1 ORDER BY user_key""".stripMargin
 
   /** R2 streaming on the state-v2 API (`transformWithState` +
-    * `ValueState` + RocksDB provider — the production state store).
-    * Same converged result as `stream_latest_per_key`; the provider
-    * conf is set for this query and restored after (state v2 requires
-    * RocksDB; the session default stays HDFS-backed). */
-  def latestPerKeyV2(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val name = uniq("latest_state_v2")
-      val q = KStreams.KStreamDS(recordStream(spark, dir)).toTableV2.toMemory(name)
-      q.processAllAvailable(); q.stop()
-      KStreams.snapshot(spark, name).orderBy(col("key"))
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
+    * `ValueState`). Same converged result as `stream_latest_per_key`. */
+  def latestPerKeyV2(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs :+ RocksDb) {
+    val name = uniq("latest_state_v2")
+    drain(KStreams.KStreamDS(recordStream(spark, dir)).toTableV2.toMemory(name))
+    KStreams.snapshot(spark, name).orderBy(col("key"))
   }
 
   val latestPerKeyV2Sql: String = latestPerKeySql
@@ -637,7 +604,7 @@ object StreamingOps {
     * = exactly one row per key, per-batch work = the changelog delta +
     * a table rewrite; nothing accumulates with stream length. The
     * final table must hash-match the batch latest-per-key oracle. */
-  def streamUpsertSnapshot(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamUpsertSnapshot(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     val base = graft.util.scratchDir("upsert_tbl")
     @volatile var current: Option[String] = None
     // (ts, event_id) is the deterministic recency order — carried in
@@ -648,15 +615,7 @@ object StreamingOps {
           struct(col("ts"), col("event_id"))).as("r"))
         .select(col("key"), col("r.value").as("value"),
           col("r.ts").as("ts"), col("r.event_id").as("event_id"))
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val withTs =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
-    val q = Checkpoints.start(withTs
+    val q = Checkpoints.start(fileStream(spark, dir, "events")
       .select(col("user_id").cast("string").as("key"),
         col("event_type").as("value"), col("ts"), col("event_id"))
       .writeStream
@@ -670,7 +629,7 @@ object StreamingOps {
         merged.write.mode("overwrite").parquet(v)
         current = Some(v)
       })
-    q.processAllAvailable(); q.stop()
+    drain(q)
     spark.read.parquet(current.get)
       .select(col("key"), col("value"), col("ts"))
       .orderBy(col("key"))
@@ -713,38 +672,22 @@ object StreamingOps {
     * operator a 100 TB ingest actually runs: batch dedup re-reads the
     * whole corpus per run, this folds each arriving micro-batch into
     * per-text state and converges to exactly the batch
-    * `dedup_normalized` answer (the DuckDB oracle checks it). Uses
-    * `transformWithState` + RocksDB provider (the production state
-    * store), same conf discipline as `stream_latest_per_key_v2`. */
-  def streamDedupCorpus(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      val name = uniq("dedup_corpus")
-      val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-      val docs: Dataset[Doc] = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        .select(
-          regexp_replace(trim(lower(col("text"))), " +", " ").as("norm"),
-          col("doc_id")).as[Doc]
-      val q = Checkpoints.start(docs.groupByKey(_.norm)
+    * `dedup_normalized` answer (the DuckDB oracle checks it). */
+  def streamDedupCorpus(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs :+ RocksDb) {
+    import spark.implicits._
+    val docs: Dataset[Doc] = fileStream(spark, dir, "documents")
+      .select(
+        regexp_replace(trim(lower(col("text"))), " +", " ").as("norm"),
+        col("doc_id")).as[Doc]
+    // converged state = last update per text (n_copies only grows)
+    drainToMemory(docs.groupByKey(_.norm)
         .transformWithState(new DedupProcessor, TimeMode.None(), OutputMode.Update())
-        .toDF("norm", "doc_id", "n_copies")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update))
-      q.processAllAvailable(); q.stop()
-      // converged state = last update per text (n_copies only grows)
-      spark.table(name)
-        .groupBy(col("norm"))
-        .agg(max_by(struct(col("doc_id"), col("n_copies")), col("n_copies")).as("r"))
-        .select(col("r.doc_id").as("doc_id"), col("r.n_copies").as("n_copies"))
-        .orderBy(col("doc_id"))
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
+        .toDF("norm", "doc_id", "n_copies"),
+      "dedup_corpus", OutputMode.Update)
+      .groupBy(col("norm"))
+      .agg(max_by(struct(col("doc_id"), col("n_copies")), col("n_copies")).as("r"))
+      .select(col("r.doc_id").as("doc_id"), col("r.n_copies").as("n_copies"))
+      .orderBy(col("doc_id"))
   }
 
   /** Same oracle as the batch normalized dedup — the streaming state
@@ -786,40 +729,27 @@ object StreamingOps {
     * 100 TB: the sketch bounds memory however many users arrive. The
     * estimate is monotone non-decreasing as elements are added, so the
     * converged snapshot is the max emission per key. */
-  def streamKmvDistinct(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      val name = uniq("kmv_distinct")
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
-      val evs = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-        .select(col("event_type"), col("user_id")).as[TypedUser]
-      val q = Checkpoints.start(evs.groupByKey(_.event_type)
+  def streamKmvDistinct(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs :+ RocksDb) {
+    import spark.implicits._
+    val evs = fileStream(spark, dir, "events")
+      .select(col("event_type"), col("user_id")).as[TypedUser]
+    val est = drainToMemory(evs.groupByKey(_.event_type)
         .transformWithState(new KmvDistinctProcessor, TimeMode.None(), OutputMode.Update())
-        .toDF("event_type", "est_distinct")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update))
-      q.processAllAvailable(); q.stop()
-      val est = spark.table(name).groupBy(col("event_type"))
-        .agg(max(col("est_distinct")).as("est_distinct"))
-      // estimate-sidecar discipline: KMV's converged estimate is
-      // deterministic (the sketch is an exact bottom-k set, arrival-
-      // order independent) — dump it, let DuckDB recompute the exact
-      // distinct per type as the referee column ⇒ hash-green.
-      graft.util.oracleSidecar("stream_kmv_estimates", est)
-      est.join(
-          spark.read.parquet(s"$dir/events.parquet")
-            .groupBy(col("event_type"))
-            .agg(countDistinct(col("user_id")).as("exact_distinct")),
-          Seq("event_type"))
-        .orderBy(col("event_type"))
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
+        .toDF("event_type", "est_distinct"),
+      "kmv_distinct", OutputMode.Update)
+      .groupBy(col("event_type"))
+      .agg(max(col("est_distinct")).as("est_distinct"))
+    // estimate-sidecar discipline: KMV's converged estimate is
+    // deterministic (the sketch is an exact bottom-k set, arrival-
+    // order independent) — dump it, let DuckDB recompute the exact
+    // distinct per type as the referee column ⇒ hash-green.
+    graft.util.oracleSidecar("stream_kmv_estimates", est)
+    est.join(
+        spark.read.parquet(s"$dir/events.parquet")
+          .groupBy(col("event_type"))
+          .agg(countDistinct(col("user_id")).as("exact_distinct")),
+        Seq("event_type"))
+      .orderBy(col("event_type"))
   }
 
   val streamKmvDistinctSql: String =
@@ -872,7 +802,7 @@ object StreamingOps {
   /** The maintenance loop itself — returns (state path, final version)
     * so the spec can audit every intermediate version as a valid
     * prefix aggregate. */
-  private[graft] def mvMaintainRun(spark: SparkSession, dir: String): (String, Int) = withStatePartitions(spark) {
+  private[graft] def mvMaintainRun(spark: SparkSession, dir: String): (String, Int) = util.withConfs(spark, StateConfs) {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -908,12 +838,11 @@ object StreamingOps {
         }
       }
       .option("checkpointLocation", graft.util.scratchDir("mv_maintain_cp")))
-    (0 until 5).foreach { salt => ms.addData(salt); q.processAllAvailable() }
-    q.stop()
+    drain(q, (0 until 5).map(salt => () => ms.addData(salt)))
     (state, version.get())
   }
 
-  def streamScd2Enrich(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamScd2Enrich(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     import org.apache.spark.sql.expressions.Window
     val wLag = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val wTie = Window.partitionBy(col("user_id"), col("ts")).orderBy(col("event_id").desc)
@@ -924,14 +853,8 @@ object StreamingOps {
       .select(col("user_id").as("d_user"), col("ts").as("valid_from"),
         col("event_type").as("state"))
       .localCheckpoint(true) // built once, before the stream starts
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val withTs =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
-    val purchases = withTs.filter(col("event_type") === "purchase")
+    val purchases = fileStream(spark, dir, "events")
+      .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"))
     val out = graft.util.scratchDir("scd2_enrich_out")
     val q = Checkpoints.start(purchases.writeStream
@@ -943,7 +866,7 @@ object StreamingOps {
             .write.mode("append").parquet(out)
       }
       .option("checkpointLocation", graft.util.scratchDir("scd2_enrich_cp")))
-    q.processAllAvailable(); q.stop()
+    drain(q)
     spark.read.parquet(out).orderBy(col("event_id"))
   }
 
@@ -984,18 +907,13 @@ object StreamingOps {
     * quantiles against exact order statistics at the 3/k rank-error
     * bound and replays a 4-chunk arrival to pin cross-batch state
     * merging. */
-  def streamKllQuantiles(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamKllQuantiles(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     import graft.functions.KllSketch._
-    val name = uniq("kll_stream")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val evs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val q = Checkpoints.start(evs.groupBy(col("event_type"))
-      .agg(kllSketch(col("value"), 200).as("sk"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete))
-    q.processAllAvailable(); q.stop()
-    val out = graft.util.materializeLocal(spark.table(name)
+    val sketches = drainToMemory(fileStream(spark, dir, "events")
+        .groupBy(col("event_type"))
+        .agg(kllSketch(col("value"), 200).as("sk")),
+      "kll_stream", OutputMode.Complete)
+    val out = graft.util.materializeLocal(sketches
       .select(col("event_type"), kllCount(col("sk")).as("n"),
         kllQuantiles(col("sk"), array(lit(0.5), lit(0.9), lit(0.99))).as("qs"))
       .select(col("event_type"), col("n"),
@@ -1123,70 +1041,53 @@ object StreamingOps {
     * verification is the shared `Dedup.verifyCandidates` tail — so
     * the converged result must EQUAL the batch LSH result exactly
     * (spec-asserted; sketch-based → rows-only driver check). */
-  def streamNearDupMinhash(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      val nHash = 16
-      val bands = 8
-      val name = uniq("neardup_stream")
-      val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-      val minCols = (0 until nHash).map(i =>
-        expr(s"array_min(transform(sh, s -> xxhash64($i, s)))").as(s"h$i"))
-      val banded: Dataset[BandedDoc] = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        .withColumn("ws", split(col("text"), " "))
-        .filter(size(col("ws")) >= 3)
-        .withColumn("sh", array_distinct(expr(
-          "transform(sequence(1, size(ws)-2), i -> concat_ws(' ', element_at(ws,i), element_at(ws,i+1), element_at(ws,i+2)))")))
-        .select(col("doc_id") +: minCols: _*)
-        .select(col("doc_id"), posexplode(array(
-          (0 until bands).map(b => xxhash64(col(s"h${2 * b}"), col(s"h${2 * b + 1}"))): _*))
-          .as(Seq("band", "band_key")))
-        .as[BandedDoc]
-      // TimeMode.None on purpose: arming the state TTL needs
-      // ProcessingTime mode, in which the engine self-schedules
-      // batches forever and processAllAvailable never quiesces — wrong
-      // lifecycle for this run-to-convergence entry. The TTL path is
-      // real and spec-verified (Round7Spec feeds a bucket across the
-      // TTL boundary); a 24/7 ingest deployment arms it
-      val q = Checkpoints.start(banded.groupByKey(d => (d.band, d.band_key))
+  def streamNearDupMinhash(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs :+ RocksDb) {
+    import spark.implicits._
+    val nHash = 16
+    val bands = 8
+    val minCols = (0 until nHash).map(i =>
+      expr(s"array_min(transform(sh, s -> xxhash64($i, s)))").as(s"h$i"))
+    val banded: Dataset[BandedDoc] = fileStream(spark, dir, "documents")
+      .withColumn("ws", split(col("text"), " "))
+      .filter(size(col("ws")) >= 3)
+      .withColumn("sh", array_distinct(expr(
+        "transform(sequence(1, size(ws)-2), i -> concat_ws(' ', element_at(ws,i), element_at(ws,i+1), element_at(ws,i+2)))")))
+      .select(col("doc_id") +: minCols: _*)
+      .select(col("doc_id"), posexplode(array(
+        (0 until bands).map(b => xxhash64(col(s"h${2 * b}"), col(s"h${2 * b + 1}"))): _*))
+        .as(Seq("band", "band_key")))
+      .as[BandedDoc]
+    // TimeMode.None on purpose: arming the state TTL needs
+    // ProcessingTime mode, in which the engine self-schedules
+    // batches forever and processAllAvailable never quiesces — wrong
+    // lifecycle for this run-to-convergence entry. The TTL path is
+    // real and spec-verified (Round7Spec feeds a bucket across the
+    // TTL boundary); a 24/7 ingest deployment arms it
+    // a pair can surface from several bands — distinct before the
+    // exact-Jaccard verify shared with the batch LSH path
+    val cand = drainToMemory(banded.groupByKey(d => (d.band, d.band_key))
         .transformWithState(new NearDupProcessor(),
           TimeMode.None(), OutputMode.Append())
-        .toDF("a_id", "b_id")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append))
-      q.processAllAvailable(); q.stop()
-      // a pair can surface from several bands — distinct before the
-      // exact-Jaccard verify shared with the batch LSH path
-      val cand = spark.table(name).distinct()
-      // hash-green since round 10 (the dedup_minhash_lsh candidate-
-      // sidecar discipline): the streamed banding candidates go to a
-      // sidecar and DuckDB replays the exact-Jaccard verify from text
-      graft.util.oracleSidecar("stream_minhash_candidates", cand)
-      Dedup.verifyCandidates(spark, dir, cand)
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
+        .toDF("a_id", "b_id"),
+      "neardup_stream", OutputMode.Append)
+      .distinct()
+    // hash-green since round 10 (the dedup_minhash_lsh candidate-
+    // sidecar discipline): the streamed banding candidates go to a
+    // sidecar and DuckDB replays the exact-Jaccard verify from text
+    graft.util.oracleSidecar("stream_minhash_candidates", cand)
+    Dedup.verifyCandidates(spark, dir, cand)
   }
 
   /** Streaming session windows: per-user sessions with a 30-minute
     * gap, closed by the watermark — the streaming twin of
     * `ks_session_window` (state per open session, evicted once the
     * watermark passes the gap; bounded regardless of stream length). */
-  def streamSessionCounts(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val name = uniq("session_counts")
-    val q = Checkpoints.start(recordStream(spark, dir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("key"))
-      .agg(count(lit(1)).as("n_events"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete))
-    q.processAllAvailable(); q.stop()
-    spark.table(name)
+  def streamSessionCounts(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
+    drainToMemory(recordStream(spark, dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(session_window(col("ts"), "30 minutes"), col("key"))
+        .agg(count(lit(1)).as("n_events")),
+      "session_counts", OutputMode.Complete)
       .select(col("key"), col("session_window.start").as("s_start"), col("n_events"))
       .orderBy(col("key"), col("s_start"))
   }
@@ -1211,14 +1112,14 @@ object StreamingOps {
     * hatch for sinks Structured Streaming lacks natively — JDBC,
     * multi-table fan-out, merge targets). Each batch appends to a
     * parquet "topic"; the read-back aggregation must equal batch. */
-  def streamForeachBatch(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamForeachBatch(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     val out = graft.util.scratchDir("fe_batch_sink")
     val q = Checkpoints.start(recordStream(spark, dir)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[KStreams.Record], _: Long) =>
         batch.write.mode("append").parquet(out)
       })
-    q.processAllAvailable(); q.stop()
+    drain(q)
     spark.read.parquet(out)
       .groupBy(col("value"))
       .agg(count(lit(1)).as("n"), countDistinct(col("key")).as("n_keys"))
@@ -1241,7 +1142,7 @@ object StreamingOps {
     * machinery. Deterministic per-query answers ⇒ the converged
     * output must equal the batch [[Similarity.ivfTopk]] row-for-row
     * (spec-asserted); index-routed ⇒ rows-only driver check. */
-  def streamAnnServe(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamAnnServe(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     // ensure the index exists BEFORE the stream starts — the serve
     // loop must never pay (or race on) a build
     val idxRoot = Similarity.ivfPqIndexRoot(spark, dir)
@@ -1250,9 +1151,7 @@ object StreamingOps {
     // index sidecars the shared SQL replays the search from
     graft.util.oracleSidecar("ivf_coarse", spark.read.parquet(s"$idxRoot/coarse_raw"))
     graft.util.oracleSidecar("ivf_assign", spark.read.parquet(s"$idxRoot/assign_raw"))
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val queries = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val queries = fileStream(spark, dir, "embeddings")
       .filter(col("vec_id") < 20)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val out = graft.util.scratchDir("ann_serve_out")
@@ -1263,7 +1162,7 @@ object StreamingOps {
             .write.mode("append").parquet(out)
       }
       .option("checkpointLocation", graft.util.scratchDir("ann_serve_cp")))
-    q.processAllAvailable(); q.stop()
+    drain(q)
     spark.read.parquet(out).orderBy(col("q_id"), col("rk"))
   }
 
@@ -1279,14 +1178,12 @@ object StreamingOps {
     * must equal the batch [[Similarity.filteredTopk]] row-for-row
     * (spec-asserted); index-routed ⇒ rows-only driver check. */
   def streamFilteredAnnServe(spark: SparkSession, dir: String): DataFrame =
-    withStatePartitions(spark) {
+    util.withConfs(spark, StateConfs) {
       val idxRoot = Similarity.ivfPqIndexRoot(spark, dir) // build before the stream starts
       // shares sim_filtered_topk's index-sidecar oracle (round 10)
       graft.util.oracleSidecar("ivf_coarse", spark.read.parquet(s"$idxRoot/coarse_raw"))
       graft.util.oracleSidecar("ivf_assign", spark.read.parquet(s"$idxRoot/assign_raw"))
-      val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-      val queries = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+      val queries = fileStream(spark, dir, "embeddings")
         .filter(col("vec_id") < 20)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val out = graft.util.scratchDir("fann_serve_out")
@@ -1297,7 +1194,7 @@ object StreamingOps {
               .write.mode("append").parquet(out)
         }
         .option("checkpointLocation", graft.util.scratchDir("fann_serve_cp")))
-      q.processAllAvailable(); q.stop()
+      drain(q)
       spark.read.parquet(out).orderBy(col("q_id"), col("rk"))
     }
 
@@ -1310,19 +1207,16 @@ object StreamingOps {
     * aggregation converges to exactly the batch answer, which DuckDB
     * replays from range(). */
   def streamDsv2Source(spark: SparkSession, dir: String): DataFrame =
-    withStatePartitions(spark) {
-      val name = uniq("dsv2stream")
-      val q = Checkpoints.start(spark.readStream.format("graft.sources.GraftRangeSource")
-        .option("rows", "10000").option("slices", "4").option("batchRows", "2500")
-        .load()
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("bucket")).as("bsum"),
-          graft.util.dsum(col("value")).as("vsum"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete()))
-      q.processAllAvailable(); q.stop()
-      spark.table(name).orderBy(col("label"))
+    util.withConfs(spark, StateConfs) {
+      drainToMemory(spark.readStream.format("graft.sources.GraftRangeSource")
+          .option("rows", "10000").option("slices", "4").option("batchRows", "2500")
+          .load()
+          .groupBy(col("label"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("bucket")).as("bsum"),
+            graft.util.dsum(col("value")).as("vsum")),
+        "dsv2stream", OutputMode.Complete())
+        .orderBy(col("label"))
     }
 
   val streamDsv2SourceSql: String =
@@ -1375,10 +1269,9 @@ object StreamingOps {
   }
 
   def streamCompactedReplay(spark: SparkSession, dir: String): DataFrame =
-    withStatePartitions(spark) {
+    util.withConfs(spark, StateConfs) {
       val name = uniq("compacted")
-      val q = KStreams.KStreamDS(compactedRecordStream(spark)).toTable.toMemory(name)
-      q.processAllAvailable(); q.stop()
+      drain(KStreams.KStreamDS(compactedRecordStream(spark)).toTable.toMemory(name))
       KStreams.snapshot(spark, name)
         .select(col("key"), col("value"),
           unix_micros(col("ts")).as("last_offset"))
@@ -1411,7 +1304,7 @@ object StreamingOps {
     * query, one trigger-mode line changed, cluster released when the
     * backlog is drained. */
   def streamAvailableNowReplay(spark: SparkSession, dir: String): DataFrame =
-    withStatePartitions(spark) {
+    util.withConfs(spark, StateConfs) {
       val name = uniq("availnow")
       val q = Checkpoints.start(KStreams.KStreamDS(compactedRecordStream(spark)).toTable.ds
         .writeStream.format("memory").queryName(name)
@@ -1420,8 +1313,9 @@ object StreamingOps {
       // self-termination IS the assertion: a regression that leaves the
       // query running (e.g. the source forgetting its AvailableNow
       // contract) fails loudly here instead of hanging the registry
-      require(q.awaitTermination(300000),
+      try require(q.awaitTermination(300000),
         "Trigger.AvailableNow query failed to self-terminate within 300 s")
+      finally q.stop()
       KStreams.snapshot(spark, name)
         .select(col("key"), col("value"),
           unix_micros(col("ts")).as("last_offset"))
@@ -1476,7 +1370,7 @@ object StreamingOps {
       .writeStream.format("graft.sources.GraftTextSink")
       .option("path", out).option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Update()))
-    q.processAllAvailable(); q.stop()
+    drain(q)
   }
 
   /** Crash simulation: delete the newest commit marker — the restart
@@ -1490,7 +1384,7 @@ object StreamingOps {
   }
 
   def streamE2eExactlyOnce(spark: SparkSession, dir: String): DataFrame =
-    withStatePartitions(spark) {
+    util.withConfs(spark, StateConfs) {
       val out = graft.util.scratchDir("e2e_eo_out")
       val ckpt = graft.util.scratchDir("e2e_eo_ckpt")
       e2eUpsertRun(spark, out, ckpt, 10000)
@@ -1553,36 +1447,23 @@ object StreamingOps {
 
   /** Per-user running top-3 event types — `transformWithState` +
     * `MapState` (completing the state-API matrix beside ValueState
-    * upserts, ListState LSH buckets, and event-time timers; RocksDB
-    * provider as in the other state-v2 runs). The converged snapshot
+    * upserts, ListState LSH buckets, and event-time timers). The converged snapshot
     * must hash-match the batch groupBy-count + rank oracle. */
-  def streamUserTopk(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      val name = uniq("user_topk")
-      val q = Checkpoints.start(recordStream(spark, dir)
+  def streamUserTopk(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs :+ RocksDb) {
+    import spark.implicits._
+    val latest = drainToMemory(recordStream(spark, dir)
         .groupByKey(_.key)
-        .transformWithState(new TopkProcessor, TimeMode.None(), OutputMode.Update())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update))
-      q.processAllAvailable(); q.stop()
-      val latest = spark.table(name)
-        .groupBy(col("key"))
-        .agg(max_by(struct(col("types"), col("counts")), col("total")).as("r"))
-        .select(col("key").cast("long").as("user_id"),
-          col("r.types").as("t"), col("r.counts").as("c"))
-      latest
-        .select(col("user_id"), posexplode(arrays_zip(col("t"), col("c"))).as(Seq("p", "z")))
-        .select(col("user_id"), (col("p") + 1).cast("long").as("rk"),
-          col("z.t").as("event_type"), col("z.c").as("n"))
-        .orderBy(col("user_id"), col("rk"))
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
+        .transformWithState(new TopkProcessor, TimeMode.None(), OutputMode.Update()),
+      "user_topk", OutputMode.Update)
+      .groupBy(col("key"))
+      .agg(max_by(struct(col("types"), col("counts")), col("total")).as("r"))
+      .select(col("key").cast("long").as("user_id"),
+        col("r.types").as("t"), col("r.counts").as("c"))
+    latest
+      .select(col("user_id"), posexplode(arrays_zip(col("t"), col("c"))).as(Seq("p", "z")))
+      .select(col("user_id"), (col("p") + 1).cast("long").as("rk"),
+        col("z.t").as("event_type"), col("z.c").as("n"))
+      .orderBy(col("user_id"), col("rk"))
   }
 
   val streamUserTopkSql: String =
@@ -1606,7 +1487,7 @@ object StreamingOps {
     * aggregate hash-matches the range() replay, proving no row was
     * lost or doubled across the epoch boundaries. */
   def streamDsv2Sink(spark: SparkSession, dir: String): DataFrame =
-    withStatePartitions(spark) {
+    util.withConfs(spark, StateConfs) {
       val out = graft.util.scratchDir("dsv2streamsink")
       val ckpt = graft.util.scratchDir("dsv2streamsink_ckpt")
       val q = Checkpoints.start(spark.readStream.format("graft.sources.GraftRangeSource")
@@ -1615,7 +1496,7 @@ object StreamingOps {
         .writeStream.format("graft.sources.GraftTextSink")
         .option("path", out).option("checkpointLocation", ckpt)
         .outputMode(OutputMode.Append()))
-      q.processAllAvailable(); q.stop()
+      drain(q)
       spark.read.schema("id long, bucket long, label string, value double")
         .csv(out)
         .groupBy(col("label"))
@@ -1649,22 +1530,19 @@ object StreamingOps {
     * Tail determinism (same discipline as the outer join): windows not
     * closed by the FINAL watermark are never emitted, so entry and
     * oracle both cut at w_start ≤ max(ts) − 2 h. */
-  def streamChainedStateful(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val name = uniq("chained_stateful")
-    val q = Checkpoints.start(recordStream(spark, dir)
-      .withColumn("hour", date_trunc("hour", col("ts")))
-      .withWatermark("ts", "0 seconds")
-      .dropDuplicatesWithinWatermark("key", "value", "hour")
-      .groupBy(window(col("ts"), "1 hour"), col("value"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("value"), col("n"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append))
-    q.processAllAvailable(); q.stop()
+  def streamChainedStateful(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
+    val counts = drainToMemory(recordStream(spark, dir)
+        .withColumn("hour", date_trunc("hour", col("ts")))
+        .withWatermark("ts", "0 seconds")
+        .dropDuplicatesWithinWatermark("key", "value", "hour")
+        .groupBy(window(col("ts"), "1 hour"), col("value"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").as("w_start"), col("value"), col("n")),
+      "chained_stateful", OutputMode.Append)
     val maxTs = graft.util.t(spark, dir, "events")
       .agg(max(col("ts"))).first().getTimestamp(0)
     val cutoff = java.sql.Timestamp.from(maxTs.toInstant.minusSeconds(2 * 3600))
-    spark.table(name)
+    counts
       .filter(col("w_start") <= lit(cutoff))
       .orderBy(col("w_start"), col("value"))
   }
@@ -1731,22 +1609,13 @@ object StreamingOps {
 
   /** The changelog derived from events: every 10th event_id is a
     * DELETE for its key, the rest upsert the event_type. */
-  private[graft] def cdcLog(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val withTs =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
-    withTs.select(
+  private[graft] def cdcLog(spark: SparkSession, dir: String): DataFrame =
+    fileStream(spark, dir, "events").select(
       col("user_id").cast("long").as("user_id"),
       when(col("event_id") % 10 === 0, "d").otherwise("u").as("op"),
       col("event_type").as("value"),
       unix_micros(col("ts")).as("us"),
       col("event_id").cast("long").as("event_id"))
-  }
 
   /** Prequential z-score input row / anomaly row / per-type state. */
   case class ZIn(event_type: String, event_id: Long, cents: Long)
@@ -1795,41 +1664,25 @@ object StreamingOps {
 
   /** The events table as a prequential scoring stream (event_id is
     * the arrival order). Shared with the arrival-split spec. */
-  private[graft] def zscoreInput(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+  private[graft] def zscoreInput(spark: SparkSession, dir: String): DataFrame =
+    fileStream(spark, dir, "events")
       .select(col("event_type"), col("event_id").cast("long").as("event_id"),
         round(col("value") * 100).cast("long").as("cents"))
-  }
 
   /** Run the prequential scorer over any ZIn stream to convergence. */
   private[graft] def runZscore(spark: SparkSession, src: Dataset[ZIn]): DataFrame = {
     import spark.implicits._
-    val name = uniq("zscore")
-    val q = Checkpoints.start(src.groupByKey(_.event_type)
-      .transformWithState(new ZscoreProcessor, TimeMode.None(), OutputMode.Append())
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append))
-    q.processAllAvailable(); q.stop()
-    spark.table(name)
+    drainToMemory(src.groupByKey(_.event_type)
+        .transformWithState(new ZscoreProcessor, TimeMode.None(), OutputMode.Append()),
+      "zscore", OutputMode.Append)
       .select(col("event_id"), col("event_type"), col("n_prior"))
       .orderBy(col("event_id"))
   }
 
   def streamZscoreAnomaly(spark: SparkSession, dir: String): DataFrame =
-    withStatePartitions(spark) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        import spark.implicits._
-        runZscore(spark, zscoreInput(spark, dir).as[ZIn])
-      } finally {
-        prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-      }
+    util.withConfs(spark, StateConfs :+ RocksDb) {
+      import spark.implicits._
+      runZscore(spark, zscoreInput(spark, dir).as[ZIn])
     }
 
   val streamZscoreAnomalySql: String =
@@ -1897,52 +1750,39 @@ object StreamingOps {
   }
 
   def streamCusumMonitor(spark: SparkSession, dir: String): DataFrame =
-    withStatePartitions(spark) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        import spark.implicits._
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val daily = graft.util.t(spark, dir, "events")
-          .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-          .agg(sum(round(col("value") * 100).cast("long")).as("v"))
-        val means = daily.groupBy(col("event_type"))
-          .agg(expr("sum(v) div count(*)").as("mu"))
-        // answer-sized feed (|types|·|days| rows), day-ordered, split
-        // into 4 chunks so the chart state provably carries across
-        // micro-batches
-        val rows = daily.join(means, Seq("event_type"))
-          .select(col("event_type"), unix_micros(col("day")).as("day_us"),
-            col("v"), col("mu"))
-          .as[CusumIn].collect().sortBy(r => (r.day_us, r.event_type))
-        implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-        val ms = MemoryStream[CusumIn]
-        val name = uniq("cusum_mon")
-        val q = Checkpoints.start(ms.toDS().groupByKey(_.event_type)
+    util.withConfs(spark, StateConfs :+ RocksDb) {
+      import spark.implicits._
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      val daily = graft.util.t(spark, dir, "events")
+        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
+        .agg(sum(round(col("value") * 100).cast("long")).as("v"))
+      val means = daily.groupBy(col("event_type"))
+        .agg(expr("sum(v) div count(*)").as("mu"))
+      // answer-sized feed (|types|·|days| rows), day-ordered, split
+      // into 4 chunks so the chart state provably carries across
+      // micro-batches
+      val rows = daily.join(means, Seq("event_type"))
+        .select(col("event_type"), unix_micros(col("day")).as("day_us"),
+          col("v"), col("mu"))
+        .as[CusumIn].collect().sortBy(r => (r.day_us, r.event_type))
+      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val ms = MemoryStream[CusumIn]
+      // converged chart = the emission with the largest n per series
+      // (n grows with every batch that touches the key, so it IS the
+      // emission order — no reliance on memory-sink row order)
+      drainToMemory(ms.toDS().groupByKey(_.event_type)
           .transformWithState(new CusumProcessor, TimeMode.None(),
-            OutputMode.Update())
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Update))
-        rows.grouped(math.max(rows.length / 4, 1)).foreach { c =>
-          ms.addData(c.toIndexedSeq); q.processAllAvailable()
-        }
-        q.stop()
-        // converged chart = the emission with the largest n per series
-        // (n grows with every batch that touches the key, so it IS the
-        // emission order — no reliance on memory-sink row order)
-        spark.table(name)
-          .groupBy(col("event_type"))
-          .agg(max_by(struct(col("n"), col("maxp"), col("maxn"), col("alarms")),
-            col("n")).as("s"))
-          .select(col("event_type"), col("s.n").as("n_days"),
-            col("s.maxp").as("max_s_pos"), col("s.maxn").as("max_s_neg"),
-            col("s.alarms").as("n_alarms"))
-          .orderBy(col("event_type"))
-      } finally {
-        prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-      }
+            OutputMode.Update()),
+        "cusum_mon", OutputMode.Update,
+        rows.grouped(math.max(rows.length / 4, 1))
+          .map(c => () => ms.addData(c.toIndexedSeq)).toSeq)
+        .groupBy(col("event_type"))
+        .agg(max_by(struct(col("n"), col("maxp"), col("maxn"), col("alarms")),
+          col("n")).as("s"))
+        .select(col("event_type"), col("s.n").as("n_days"),
+          col("s.maxp").as("max_s_pos"), col("s.maxn").as("max_s_neg"),
+          col("s.alarms").as("n_alarms"))
+        .orderBy(col("event_type"))
     }
 
   val streamCusumMonitorSql: String =
@@ -1982,24 +1822,12 @@ object StreamingOps {
       |FROM cusum WHERE rn = n
       |ORDER BY event_type""".stripMargin
 
-  def streamCdcApply(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      val name = uniq("cdc_apply")
-      val q = Checkpoints.start(cdcLog(spark, dir).as[CdcOp]
+  def streamCdcApply(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs :+ RocksDb) {
+    import spark.implicits._
+    cdcSnapshot(drainToMemory(cdcLog(spark, dir).as[CdcOp]
         .groupByKey(_.user_id)
-        .transformWithState(new CdcApplyProcessor, TimeMode.None(), OutputMode.Update())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update))
-      q.processAllAvailable(); q.stop()
-      cdcSnapshot(spark.table(name))
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
+        .transformWithState(new CdcApplyProcessor, TimeMode.None(), OutputMode.Update()),
+      "cdc_apply", OutputMode.Update))
   }
 
   /** Converged live table from the update stream: last emission per
@@ -2076,29 +1904,18 @@ object StreamingOps {
     }
   }
 
-  def streamCdcView(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      val name = uniq("cdc_view")
-      val q = Checkpoints.start(cdcLog(spark, dir).as[CdcOp]
+  def streamCdcView(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs :+ RocksDb) {
+    import spark.implicits._
+    // the view merge: monoid-sum the retraction stream per group —
+    // groups whose live count nets to zero leave the view
+    drainToMemory(cdcLog(spark, dir).as[CdcOp]
         .groupByKey(_.user_id)
-        .transformWithState(new CdcViewProcessor, TimeMode.None(), OutputMode.Append())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append))
-      q.processAllAvailable(); q.stop()
-      // the view merge: monoid-sum the retraction stream per group —
-      // groups whose live count nets to zero leave the view
-      spark.table(name).groupBy(col("value"))
-        .agg(sum(col("d_keys")).as("n_live"), sum(col("d_users")).as("sum_user_ids"))
-        .filter(col("n_live") > 0)
-        .orderBy(col("value"))
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
+        .transformWithState(new CdcViewProcessor, TimeMode.None(), OutputMode.Append()),
+      "cdc_view", OutputMode.Append)
+      .groupBy(col("value"))
+      .agg(sum(col("d_keys")).as("n_live"), sum(col("d_users")).as("sum_user_ids"))
+      .filter(col("n_live") > 0)
+      .orderBy(col("value"))
   }
 
   /** Full recompute over the CDC-applied table — the incremental view
@@ -2171,34 +1988,14 @@ object StreamingOps {
     * the way `stream_dedup_corpus`/`dedup_normalized` pair: the live
     * state machine's converged snapshot must hash-match the batch
     * funnel's DuckDB oracle exactly. */
-  def streamFunnel(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      val name = uniq("funnel")
-      val path = s"$dir/events.parquet"
-      val schema = spark.read.parquet(path).schema
-      val raw = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val withTs =
-        if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        else raw
-      val q = Checkpoints.start(withTs
+  def streamFunnel(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs :+ RocksDb) {
+    import spark.implicits._
+    funnelSnapshot(drainToMemory(fileStream(spark, dir, "events")
         .select(col("user_id").cast("long").as("user_id"),
           col("event_type"), unix_micros(col("ts")).as("us")).as[FEvent]
         .groupByKey(_.user_id)
-        .transformWithState(new FunnelProcessor, TimeMode.None(), OutputMode.Update())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update))
-      q.processAllAvailable(); q.stop()
-      funnelSnapshot(spark.table(name))
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
+        .transformWithState(new FunnelProcessor, TimeMode.None(), OutputMode.Update()),
+      "funnel", OutputMode.Update))
   }
 
   /** Converged funnel table from the update-mode sink: last emission
@@ -2232,7 +2029,7 @@ object StreamingOps {
     * poisoned batches. At 100 TB each stage is one object-store
     * write and the audit an answer-sized aggregate; the ledger is the
     * ops surface. */
-  def streamWapIngest(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamWapIngest(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val base = graft.util.scratchDir("wap_stream")
@@ -2273,13 +2070,10 @@ object StreamingOps {
       })
     // one chunk per micro-batch: add, drain, repeat — chunk k is
     // exactly batch k, so the ledger keys deterministically
-    (0 until 6).foreach { k =>
-      val chunk = rows.filter(t => t._1 % 6 == k)
-        .map { case (id, et, c) => if (k % 3 == 1) (id, et, -c) else (id, et, c) }
-      ms.addData(chunk.toSeq)
-      q.processAllAvailable()
-    }
-    q.stop()
+    drain(q, (0 until 6).map { k => () =>
+      ms.addData(rows.filter(t => t._1 % 6 == k).toSeq
+        .map { case (id, et, c) => if (k % 3 == 1) (id, et, -c) else (id, et, c) })
+    })
     val ledgerDf = ledger.toSeq.toDF("batch", "decision", "n_rows", "staged_cents")
     // the published table must hold exactly the clean chunks: fold its
     // own recount into the result so the oracle cross-checks storage,
@@ -2334,7 +2128,7 @@ object StreamingOps {
     * streaming half really streams (file source → foreachBatch →
     * parquet tail table); the merge is one anti-join, which at 100 TB
     * runs key-bucketed on the id. */
-  def streamBackfillMerge(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamBackfillMerge(spark: SparkSession, dir: String): DataFrame = util.withConfs(spark, StateConfs) {
     val base = graft.util.scratchDir("backfill")
     val ev = graft.util.t(spark, dir, "events")
       .select(col("event_id"), col("event_type"),
@@ -2345,15 +2139,7 @@ object StreamingOps {
     ev.filter(col("day") < cut).write.parquet(s"$base/backfill")
     // the stream tail: replays from ONE DAY BEFORE the cutoff — the
     // deliberate seam overlap the merge must absorb
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val withTs =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
-    val q = Checkpoints.start(withTs
+    val q = Checkpoints.start(fileStream(spark, dir, "events")
       .select(col("event_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"),
         (unix_micros(col("ts")) / 86400000000L).cast("long").as("day"))
@@ -2362,7 +2148,7 @@ object StreamingOps {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         batch.write.mode("overwrite").parquet(s"$base/tail_$id")
       })
-    q.processAllAvailable(); q.stop()
+    drain(q)
     val backfill = spark.read.parquet(s"$base/backfill")
     val tail = spark.read.parquet(s"$base/tail_*")
     val merged = backfill.unionByName(

@@ -1278,14 +1278,8 @@ object FileSources {
     val restate = orders
       .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .withColumn("cents", col("cents") + 1)
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try restate.write.mode("overwrite")
-      .partitionBy("o_orderpriority").parquet(out)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    withConfs(spark, Seq("spark.sql.sources.partitionOverwriteMode" -> "dynamic")) {
+      restate.write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
     }
     spark.read.parquet(out)
       .groupBy(col("o_orderpriority"))

@@ -284,7 +284,7 @@ class Round4Spec extends AnyFunSuite {
 
   test("AQE splits the skewed join partition at runtime (skew=true in the executed plan)") {
     val (lPath, rPath) = operators.SqlSurface.q57SkewData(spark, sf)
-    operators.SqlSurface.withConfs(spark, operators.SqlSurface.q57Confs) {
+    util.withConfs(spark, operators.SqlSurface.q57Confs) {
       val j = operators.SqlSurface.q57Join(spark, lPath, rPath)
       // collect() (not count()) — count() runs its OWN query execution,
       // leaving j's adaptive plan unfinalized

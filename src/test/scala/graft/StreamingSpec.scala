@@ -4,6 +4,7 @@ import graft.streaming.KStreams
 import graft.streaming.KStreams.Record
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
@@ -152,5 +153,56 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("w") === ts("2024-01-01 10:00:00"))
       .agg(max("n")).collect().head.getLong(0)
     assert(tenOClock == 1, "late row leaked into a finalized window")
+  }
+
+  test("drainToMemory under withConfs stops its query and restores every conf, also when a batch, a feed or the body throws") {
+    import operators.StreamingOps.{RocksDb, StateConfs, drainToMemory}
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val unsetKey = "spark.graft.test.scopedUnset"
+    val confs = StateConfs :+ RocksDb :+ (unsetKey -> "on")
+    def current = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val before = current
+    assert(spark.conf.getOption("spark.sql.shuffle.partitions").contains("4")) // set by the session
+    assert(spark.conf.getOption(unsetKey).isEmpty)
+    val activeBefore = spark.streams.active.map(_.id).toSet
+    def assertRestored(): Unit = {
+      assert(spark.streams.active.map(_.id).toSet == activeBefore, "a drained query is still running")
+      assert(current == before)
+    }
+
+    val doubled = util.withConfs(spark, confs) {
+      assert(current == confs.map { case (k, v) => k -> Some(v) })
+      val ms = MemoryStream[Int]
+      drainToMemory(ms.toDS().map(_ * 2), "drain_ok", OutputMode.Append,
+        Seq(() => ms.addData(1, 2), () => ms.addData(3)))
+        .as[Int].collect().sorted.toSeq
+    }
+    assert(doubled == Seq(2, 4, 6))
+    assertRestored()
+
+    intercept[StreamingQueryException] {
+      util.withConfs(spark, confs) {
+        val ms = MemoryStream[Int]
+        drainToMemory(ms.toDS().map(i => if (i == 3) throw new IllegalStateException("bad row") else i),
+          "drain_fail", OutputMode.Append, Seq(() => ms.addData(1), () => ms.addData(3)))
+      }
+    }
+    assertRestored()
+
+    // a failed batch terminates its query; a throwing feed leaves it running
+    intercept[IllegalStateException] {
+      util.withConfs(spark, confs) {
+        val ms = MemoryStream[Int]
+        drainToMemory(ms.toDS(), "drain_feed", OutputMode.Append,
+          Seq(() => ms.addData(1), () => throw new IllegalStateException("bad feed")))
+      }
+    }
+    assertRestored()
+
+    intercept[IllegalStateException] {
+      util.withConfs(spark, confs)(throw new IllegalStateException("body"))
+    }
+    assertRestored()
   }
 }

@@ -10,20 +10,7 @@ import org.apache.spark.sql.SparkSession
 /** One session for the whole test JVM (suites share it). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // driver testdata is parquet timestamp[us] with no UTC flag: read it as
-      // session-zone (UTC) TimestampType, not NTZ — watermarks/unix_micros/as-of
-      // require TimestampType and every oracle was defined on UTC wall-clock
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse_test")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Harness.session("4", "test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

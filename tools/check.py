@@ -7,6 +7,10 @@ For each <name>.parquet dir under verifyOutDir with an entry in
 oracle_sql.json: run the SQL in DuckDB over views of sfDir's tables,
 load the Spark parquet, sort columns by name, and compare values
 cell-by-cell (floats exact by default; report max delta when not).
+
+A dump from a SPARK_GRAFT_VERIFY_ONLY run carries a _FILTERED file
+listing the names it ran; only those are checked. Exits 1 when any
+checked entry fails.
 """
 import json, sys, math
 import duckdb
@@ -80,7 +84,12 @@ def main():
         p = f"{sf_dir}/{t}.parquet"
         if Path(p).exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    oracle = json.loads(Path(f"{out_dir}/oracle_sql.json").read_text())
+    declared = json.loads(Path(f"{out_dir}/oracle_sql.json").read_text())
+    oracle = declared
+    filtered = Path(f"{out_dir}/_FILTERED")
+    if filtered.exists():
+        only = set(filtered.read_text().split())
+        oracle = {k: v for k, v in declared.items() if k in only}
     results = {}
     for name in sorted(oracle):
         sql = oracle[name]
@@ -131,10 +140,11 @@ def main():
         print(("PASS " if v.startswith("OK") else "FAIL ") + f"{name}: {v}")
     # queries with no oracle entry
     for pdir in sorted(Path(out_dir).iterdir()):
-        if pdir.is_dir() and pdir.name not in oracle:
+        if pdir.is_dir() and pdir.name not in declared:
             n = len(pd.read_parquet(pdir))
             print(f"NOORACLE {pdir.name}: rows={n}")
     print(f"== {npass}/{len(results)} oracle-checked queries pass ==")
+    sys.exit(0 if npass == len(results) else 1)
 
 if __name__ == "__main__":
     main()

@@ -36,6 +36,16 @@ object util {
     else df
   }
 
+  /** Write `df` as parquet to `path` and read it back with `df`'s
+    * schema: no footer-reading job, partition columns keep their types,
+    * and a zero-row write (no part file when partitioned) reads back
+    * empty instead of failing with UNABLE_TO_INFER_SCHEMA. */
+  def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil,
+      mode: String = "errorifexists"): DataFrame = {
+    df.write.mode(mode).partitionBy(partitionBy: _*).parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
+  }
+
   /** Order-independent, engine-exact sum of a double column:
     * per-row cast to decimal(22,8) (exact for the testdata's 2-decimal
     * money columns and any product of up to four of them — scale 8
@@ -177,22 +187,62 @@ object util {
   private[graft] val artifactBuildLog =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-  /** Repo-wide artifact-cache FORMAT/CODE revision, folded into the
-    * cache base directory name. tableFingerprint keys artifacts by
-    * source DATA, but a cache entry is a function of (data, params,
-    * BUILD CODE) — without a code revision, editing a build closure
-    * silently serves stale pre-edit artifacts across JVMs (the round-9
-    * dedup "-v2" manual bump showed the hazard is real). BUMP THIS
-    * whenever any `artifactRoot` build closure changes behavior; all
-    * roots rebuild once under the new base and old bases age out. */
-  private val CacheRev = "r10"
+  /** (thread id, key) of EVERY [[artifactRoot]] call, hit or build:
+    * the spec holding `Bench.amortizedEntries` to the cache readers. */
+  private[graft] val artifactTouchLog =
+    new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
 
-  /** Base directory of the cross-JVM artifact cache for the CURRENT
-    * [[CacheRev]] — exposed so specs derive cleanup paths from the
-    * live revision instead of hardcoding a suffix that silently
-    * no-ops after a CacheRev bump (ADVICE r16). */
+  /** MD5 (16 hex chars) over the compiled bytecode of every class in
+    * the graft package, computed once per JVM: the version of the code
+    * that builds artifacts. Every class counts, nested and anonymous
+    * ones and helpers like [[t]] included, because an artifact depends
+    * on whatever code its build closure reaches; an edit anywhere
+    * over-invalidates, which is the safe direction. */
+  private[graft] lazy val codeVersion: String = {
+    val src = getClass.getProtectionDomain.getCodeSource
+    require(src != null && src.getLocation != null,
+      "codeVersion: no code source for the graft classes — refusing " +
+      "a constant key (it would serve stale artifacts forever)")
+    codeVersionOf(new java.io.File(src.getLocation.toURI))
+  }
+
+  /** [[codeVersion]] of the `graft/` classes under `root`, a class
+    * directory or a jar. Entries are hashed with their root-relative
+    * names, sorted, so the digest is independent of where the tree
+    * lives and of filesystem or jar iteration order. */
+  private[graft] def codeVersionOf(root: java.io.File): String = {
+    import scala.jdk.CollectionConverters._
+    val classes: Seq[(String, Array[Byte])] =
+      if (root.isDirectory) {
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+        walk(new java.io.File(root, "graft")).filter(_.getName.endsWith(".class"))
+          .map(f => root.toPath.relativize(f.toPath).toString.replace('\\', '/') ->
+            java.nio.file.Files.readAllBytes(f.toPath))
+      } else {
+        val jar = new java.util.jar.JarFile(root)
+        try jar.entries().asScala.toSeq
+          .filter(e => e.getName.startsWith("graft/") && e.getName.endsWith(".class"))
+          .map(e => e.getName -> jar.getInputStream(e).readAllBytes())
+        finally jar.close()
+      }
+    require(classes.nonEmpty, s"codeVersion: zero graft .class resources found " +
+      s"under $root — refusing a constant key")
+    val md = java.security.MessageDigest.getInstance("MD5")
+    classes.sortBy(_._1).foreach { case (name, bytes) =>
+      md.update(name.getBytes("UTF-8")); md.update(bytes)
+    }
+    md.digest().map("%02x".format(_)).mkString.take(16)
+  }
+
+  private val artifactCachePrefix = "graft_artifact_cache_"
+
+  /** Base directory of the cross-JVM artifact cache for the code in
+    * this JVM: `java.io.tmpdir/graft_artifact_cache_<codeVersion>`.
+    * Code built from other sources uses another base, so no JVM serves
+    * an artifact that other code built. */
   private[graft] def artifactCacheBase: java.io.File =
-    new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_artifact_cache_$CacheRev")
+    new java.io.File(sys.props("java.io.tmpdir"), artifactCachePrefix + codeVersion)
 
   /** Per-key build monitors: ConcurrentHashMap.computeIfAbsent is safe
     * HERE (the mapping function allocates a plain Object and cannot
@@ -226,8 +276,17 @@ object util {
     * root and a second JVM (Verify, Bench, every spec suite) READS
     * the artifacts instead of rebuilding. A lost rename race means
     * another JVM published the identical (deterministic) build first
-    * — use theirs, drop ours. `key` MUST encode both the source-data
-    * fingerprint ([[tableFingerprint]]) and every build parameter. */
+    * — use theirs, drop ours.
+    *
+    * An artifact is a function of its inputs and of the code that
+    * built it. The code is in the base ([[artifactCacheBase]]), so
+    * `key` carries the inputs only: the artifact's name, the
+    * [[tableFingerprint]] of every table the build reads and any value
+    * a caller passes at run time. A constant in the graft sources,
+    * such as a build parameter or an artifact-set revision, does not
+    * go in the key: editing it changes the code version. Test classes
+    * are not hashed, so a key built by test code carries its own
+    * revision tag. */
   def artifactRoot(key: String)(build: String => Unit): String = {
     // REENTRANT by construction: build closures legitimately call
     // artifactRoot for nested artifacts (the resource-audit
@@ -241,6 +300,7 @@ object util {
     // stage-and-atomic-rename disk protocol (which already tolerates
     // concurrent CROSS-JVM builders — a lost rename means an
     // identical deterministic build published first).
+    artifactTouchLog.add((Thread.currentThread.getId, key))
     val cached = artifactRoots.get(key)
     if (cached != null) cached
     else artifactLocks.computeIfAbsent(key, _ => new Object).synchronized {
@@ -249,7 +309,10 @@ object util {
       else {
         val base = artifactCacheBase
         base.mkdirs()
-        if (sweptOnce.compareAndSet(false, true)) sweepStaleStaging(base)
+        if (sweptOnce.compareAndSet(false, true)) {
+          base.setLastModified(System.currentTimeMillis)
+          sweepStale(base.getParentFile, base)
+        }
         val stable = new java.io.File(base, key)
         val manifest = new java.io.File(stable, "_MANIFEST")
         if (!manifest.isFile) {
@@ -267,17 +330,27 @@ object util {
     }
   }
 
-  /** Orphaned `.tmp-<uuid>` staging dirs leak when a building JVM is
-    * killed mid-build (the shutdown-delete hook never runs), so every
-    * cache-dir touch sweeps siblings that are stale by mtime — one
-    * hour is far beyond any real build, and a LIVE concurrent build's
-    * staging dir is minutes old at most, so the sweep can never eat
-    * an in-flight publish. Runs at most once per JVM. */
+  /** Once per JVM, on its first cache touch, sweep what no live run
+    * can still be using:
+    *  - `.tmp-<uuid>` staging dirs in `current` older than an hour.
+    *    They leak when a building JVM is killed mid-build; a live
+    *    build's staging dir is minutes old at most.
+    *  - Sibling `graft_artifact_cache_*` bases in `parent`, other than
+    *    `current`, last modified more than a day ago: every code edit
+    *    starts a new base. Each JVM touches its own base's mtime first,
+    *    and a day is a wide margin over any live run (a full test run
+    *    takes under 20 min), so a running JVM of other code never loses
+    *    its base. */
   private val sweptOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private[graft] def sweepStaleStaging(base: java.io.File): Unit = {
-    val cutoff = System.currentTimeMillis - 60L * 60 * 1000
-    Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(".tmp-") && f.lastModified < cutoff)
+  private[graft] def sweepStale(parent: java.io.File, current: java.io.File): Unit = {
+    val now = System.currentTimeMillis
+    def list(d: java.io.File) = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+    list(current)
+      .filter(f => f.getName.startsWith(".tmp-") && f.lastModified < now - 60L * 60 * 1000)
+      .foreach(deleteRecursively)
+    list(parent)
+      .filter(f => f.isDirectory && f.getName.startsWith(artifactCachePrefix) &&
+        f.getName != current.getName && f.lastModified < now - 24L * 60 * 60 * 1000)
       .foreach(deleteRecursively)
   }
 

@@ -1127,20 +1127,14 @@ object Dedup {
   // the signature/pair/component tables ONCE per corpus snapshot and
   // every downstream policy (keep-first, component-collapse, cluster
   // report) reads them. [[dedupGraphRoot]] is that split: one
-  // cross-JVM [[graft.util.artifactRoot]] build per (documents
-  // fingerprint, params), entries read the artifacts. At 100 TB the
+  // cross-JVM [[graft.util.artifactRoot]] build per documents
+  // fingerprint, entries read the artifacts. At 100 TB the
   // same tables live on the object store keyed by table version.
   // ------------------------------------------------------------------
 
   /** The artifact names under a dedup-graph root. */
   val dedupArtifacts: Seq[String] =
     Seq("shingles", "sigs", "pairs_exact", "pairs_minhash", "components")
-
-  /** Param fingerprint: shingle width, Jaccard threshold, minhash
-    * geometry — a changed knob must never reuse stale pairs. The `v2`
-    * marks the artifact-set revision (round 9 added `shingles`); a
-    * root published under the old set must not satisfy the new one. */
-  private def dedupParamsKey: String = s"sh3-j0.8-mh${mhHashes}x$mhBands-v2"
 
   /** Build every derived dedup relation under `root` (parquet):
     *  - `sigs`         (doc_id, h0..h15, n) — minhash signatures +
@@ -1156,21 +1150,19 @@ object Dedup {
     // inverted-index entries (prefix filter, containment,
     // contamination) read it instead of re-running explode+distinct
     // over the corpus per execution
-    shingles(spark, dir).write.parquet(s"$root/shingles")
-    val sh = spark.read.parquet(s"$root/shingles")
+    val sh = writeParquet(shingles(spark, dir), s"$root/shingles")
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    minhashSigsOf(sh).write.parquet(s"$root/sigs")
-    val sigs = spark.read.parquet(s"$root/sigs")
-    exactPairsOf(sh, sizes).write.parquet(s"$root/pairs_exact")
+    val sigs = writeParquet(minhashSigsOf(sh), s"$root/sigs")
+    val pairs = writeParquet(exactPairsOf(sh, sizes), s"$root/pairs_exact")
     minhashPairsOf(sh, sigs).write.parquet(s"$root/pairs_minhash")
-    componentLabelsOf(spark.read.parquet(s"$root/pairs_exact")
-      .select(col("a_id"), col("b_id"))).write.parquet(s"$root/components")
+    componentLabelsOf(pairs.select(col("a_id"), col("b_id")))
+      .write.parquet(s"$root/components")
   }
 
   /** Root of the persisted dedup graph for `dir` — cross-JVM, atomic
     * publish, build-if-absent (see [[graft.util.artifactRoot]]). */
   def dedupGraphRoot(spark: SparkSession, dir: String): String =
-    artifactRoot(s"dedupgraph-${tableFingerprint(dir, "documents")}-$dedupParamsKey")(
+    artifactRoot(s"dedupgraph-${tableFingerprint(dir, "documents")}")(
       buildDedupGraph(spark, dir, _))
 
   /** `dedup_index_build` entry: ensure the graph exists, report the

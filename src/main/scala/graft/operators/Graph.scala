@@ -223,7 +223,7 @@ object Graph {
 
   private def lpaLabelsRoot(spark: SparkSession, dir: String): String =
     artifactRoot(s"lpalabels-${tableFingerprint(dir, "orders")}-" +
-        s"${tableFingerprint(dir, "lineitem")}-q48r3") { staged =>
+        s"${tableFingerprint(dir, "lineitem")}") { staged =>
       lpaLabelsLive(spark, dir).write.parquet(s"$staged/labels")
     }
 

@@ -380,19 +380,20 @@ object SqlSurface {
     * fingerprint): bench reps measure the dynamically-pruned read, not
     * the ~200-partition-dir write. */
   def q80Join(spark: SparkSession, dir: String): DataFrame = {
+    val fact = t(spark, dir, "orders")
+      .withColumn("pmonth", date_format(col("o_orderdate"), "yyyy-MM"))
+    def dimOf(f: DataFrame): DataFrame = f.select(col("pmonth")).distinct()
+      .withColumn("quarter", concat(substring(col("pmonth"), 1, 4), lit("-Q"),
+        expr("(cast(substring(pmonth, 6, 2) as int) - 1) div 3 + 1")))
     val root = artifactRoot(s"dpp-${tableFingerprint(dir, "orders")}") { staged =>
-      t(spark, dir, "orders")
-        .withColumn("pmonth", date_format(col("o_orderdate"), "yyyy-MM"))
-        .repartition(col("pmonth")) // one file per partition dir, not one per task
-        .write.partitionBy("pmonth").parquet(s"$staged/fact")
-      spark.read.parquet(s"$staged/fact").select(col("pmonth")).distinct()
-        .withColumn("quarter", concat(substring(col("pmonth"), 1, 4), lit("-Q"),
-          expr("(cast(substring(pmonth, 6, 2) as int) - 1) div 3 + 1")))
-        .write.parquet(s"$staged/dim")
+      // one file per partition dir, not one per task
+      val written = writeParquet(fact.repartition(col("pmonth")), s"$staged/fact", Seq("pmonth"))
+      dimOf(written).write.parquet(s"$staged/dim")
     }
-    spark.read.parquet(s"$root/fact")
-      .join(spark.read.parquet(s"$root/dim").filter(col("quarter") === "1999-Q1"),
-        Seq("pmonth"))
+    // read with the written schemas: an empty fact reads as empty
+    spark.read.schema(fact.schema).parquet(s"$root/fact")
+      .join(spark.read.schema(dimOf(fact).schema).parquet(s"$root/dim")
+        .filter(col("quarter") === "1999-Q1"), Seq("pmonth"))
   }
 
   val q80Sql: String =

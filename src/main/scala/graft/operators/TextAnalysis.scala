@@ -1318,12 +1318,12 @@ object TextAnalysis {
     * tie-break, no RNG) — and, since round 14, fully DuckDB-replayed:
     * see [[bpeCtes]] for how the 16 dependent argmax rounds unroll. */
   /** Trained-tokenizer artifacts (merge table + final word
-    * segmentations), built once per (documents fingerprint, rounds)
-    * in the cross-JVM cache — the production tokenizer lifecycle:
+    * segmentations), built once per documents fingerprint in the
+    * cross-JVM cache — the production tokenizer lifecycle:
     * train once, apply everywhere. The 16 driver-roundtrip training
     * rounds run in the build, not per entry execution. */
   private def bpeRoot(spark: SparkSession, dir: String): String =
-    artifactRoot(s"bpe-${tableFingerprint(dir, "documents")}-r16") { staged =>
+    artifactRoot(s"bpe-${tableFingerprint(dir, "documents")}") { staged =>
       val (merges, words) = bpeTrain(spark, dir, 16)
       import spark.implicits._
       merges.toDF("rank", "left", "right", "merged", "pair_count")

@@ -161,19 +161,17 @@ object Warehouse {
     val base0 = t(spark, dir, "orders")
       .withColumn("file_id", pmod(col("o_orderkey"), lit(nFiles)))
       .withColumn("pos", row_number().over(wPos).cast("long"))
-    val basePath = scratchDir("dv_base")
-    base0.select(col("file_id"), col("pos"), col("o_orderkey"),
-        col("o_orderpriority"), col("o_totalprice"))
-      .repartition(col("file_id"))
-      .write.partitionBy("file_id").parquet(basePath)
-    val base = spark.read.parquet(basePath)
+    val base = writeParquet(
+      base0.select(col("file_id"), col("pos"), col("o_orderkey"),
+          col("o_orderpriority"), col("o_totalprice"))
+        .repartition(col("file_id")),
+      scratchDir("dv_base"), Seq("file_id"))
     // the DELETE: predicate evaluated ONCE at delete time, persisted
     // as bare coordinates (file_id, pos)
-    val dvPath = scratchDir("dv_sidecar")
-    base.filter(col("o_orderkey") % 5 === 0 || col("o_totalprice") > 400000.0)
-      .select(col("file_id"), col("pos"))
-      .write.parquet(dvPath)
-    val dv = spark.read.parquet(dvPath)
+    val dv = writeParquet(
+      base.filter(col("o_orderkey") % 5 === 0 || col("o_totalprice") > 400000.0)
+        .select(col("file_id"), col("pos")),
+      scratchDir("dv_sidecar"))
     base.join(dv, Seq("file_id", "pos"), "left_anti")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_live"), dsum(col("o_totalprice")).as("live_total"))
@@ -300,20 +298,18 @@ object Warehouse {
   def q77DvCompaction(spark: SparkSession, dir: String): DataFrame = {
     val nFiles = 8
     val wPos = Window.partitionBy(col("file_id")).orderBy(col("o_orderkey"))
-    val basePath = scratchDir("dvc_base")
-    t(spark, dir, "orders")
-      .withColumn("file_id", pmod(col("o_orderkey"), lit(nFiles)))
-      .withColumn("pos", row_number().over(wPos).cast("long"))
-      .select(col("file_id"), col("pos"), col("o_orderkey"),
-        col("o_orderpriority"), col("o_totalprice"))
-      .repartition(col("file_id"))
-      .write.partitionBy("file_id").parquet(basePath)
-    val base = spark.read.parquet(basePath)
-    val dvPath = scratchDir("dvc_sidecar")
-    base.filter(col("o_orderkey") % 16 < 3 || col("o_totalprice") > 480000.0)
-      .select(col("file_id"), col("pos"))
-      .write.parquet(dvPath)
-    val dv = spark.read.parquet(dvPath)
+    val base = writeParquet(
+      t(spark, dir, "orders")
+        .withColumn("file_id", pmod(col("o_orderkey"), lit(nFiles)))
+        .withColumn("pos", row_number().over(wPos).cast("long"))
+        .select(col("file_id"), col("pos"), col("o_orderkey"),
+          col("o_orderpriority"), col("o_totalprice"))
+        .repartition(col("file_id")),
+      scratchDir("dvc_base"), Seq("file_id"))
+    val dv = writeParquet(
+      base.filter(col("o_orderkey") % 16 < 3 || col("o_totalprice") > 480000.0)
+        .select(col("file_id"), col("pos")),
+      scratchDir("dvc_sidecar"))
     // policy from manifest-sized stats: files with 4·deleted ≥ total
     val stats = base.groupBy(col("file_id")).agg(count(lit(1)).as("tot"))
       .join(dv.groupBy(col("file_id")).agg(count(lit(1)).as("del")),
@@ -322,18 +318,18 @@ object Warehouse {
     val hot = stats.filter(col("del") * 4 >= col("tot")).select(col("file_id"))
     // the rewrite: hot files' survivors materialized WITHOUT coordinates'
     // baggage; their DV entries are retired with them
-    val compactPath = scratchDir("dvc_compact")
-    base.join(hot, Seq("file_id"), "left_semi")
-      .join(dv, Seq("file_id", "pos"), "left_anti")
-      .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-      .coalesce(2)
-      .write.parquet(compactPath)
+    val compacted = writeParquet(
+      base.join(hot, Seq("file_id"), "left_semi")
+        .join(dv, Seq("file_id", "pos"), "left_anti")
+        .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
+        .coalesce(2),
+      scratchDir("dvc_compact"))
     // v2 read: untouched files still merge their (small) vectors;
     // compacted files scan clean
     val keptRead = base.join(hot, Seq("file_id"), "left_anti")
       .join(dv, Seq("file_id", "pos"), "left_anti")
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-    keptRead.unionByName(spark.read.parquet(compactPath))
+    keptRead.unionByName(compacted)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_live"), dsum(col("o_totalprice")).as("live_total"))
       .orderBy(col("o_orderpriority"))
@@ -407,12 +403,9 @@ object Warehouse {
 
   /** Build-once root for BOTH matviews (cross-JVM, atomic publish).
     * The build computes the canonical aggregates while nothing is
-    * registered for a fresh root, so it always scans fact. The `2` in
-    * the key is this builder's revision — the closure gained the
-    * roll-up view, and a root published by the single-view closure
-    * must not satisfy it (the ADVICE r9 cache-key discipline). */
+    * registered for a fresh root, so it always scans fact. */
   private def mvRoot(spark: SparkSession, dir: String): String =
-    artifactRoot(s"matview2-${tableFingerprint(dir, "orders")}") { root =>
+    artifactRoot(s"matview-${tableFingerprint(dir, "orders")}") { root =>
       canonicalStatusRevenue(spark, dir)
         .write.parquet(s"$root/status_revenue")
       t(spark, dir, "orders")
@@ -1125,63 +1118,6 @@ object Warehouse {
     (p.shuffleRecs.get(), p.peak.get(), p.spilled.get())
   }
 
-  /** MD5 (16 hex chars) over the compiled bytecode of EVERY class in
-    * the graft package — the certificate's code-version key. The r16
-    * version hashed only five top-level module class files, but panel
-    * behavior also lives in separately-compiled nested and anonymous
-    * classes (Warehouse$AuditProbe — the listener doing the counting —
-    * Analytics$$anon$*, typecreators) and in helpers outside those
-    * files (util.t, source readers): an edit confined to such a class
-    * left every hashed file byte-identical and served a STALE
-    * certificate (ADVICE r16). Enumerating the whole package prefix
-    * over-invalidates — any graft edit forces one honest ~8 s
-    * re-measure — which is the safe direction for a certificate.
-    * Entries are sorted by resource name so the digest is independent
-    * of filesystem/jar iteration order. */
-  private[graft] lazy val auditCodeKey: String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val src = Warehouse.getClass.getProtectionDomain.getCodeSource
-    require(src != null && src.getLocation != null,
-      "auditCodeKey: no code source for the graft classes — refusing " +
-      "a constant key (it would serve stale certificates forever)")
-    val loc = new java.io.File(src.getLocation.toURI)
-    def hashEntry(name: String, bytes: Array[Byte]): Unit = {
-      md.update(name.getBytes("UTF-8")); md.update(bytes)
-    }
-    var n = 0
-    if (loc.isDirectory) {
-      def walk(f: java.io.File): Seq[java.io.File] = {
-        val kids = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-        if (f.isDirectory) kids.flatMap(walk) else Seq(f)
-      }
-      val base = loc.toPath
-      walk(new java.io.File(loc, "graft"))
-        .filter(_.getName.endsWith(".class"))
-        .map(f => base.relativize(f.toPath).toString.replace('\\', '/') -> f)
-        .sortBy(_._1)
-        .foreach { case (name, f) =>
-          hashEntry(name, java.nio.file.Files.readAllBytes(f.toPath)); n += 1
-        }
-    } else {
-      val jar = new java.util.jar.JarFile(loc)
-      try {
-        import scala.jdk.CollectionConverters._
-        jar.entries().asScala
-          .filter(e => e.getName.startsWith("graft/") &&
-            e.getName.endsWith(".class"))
-          .toSeq.sortBy(_.getName)
-          .foreach { e =>
-            val in = jar.getInputStream(e)
-            try hashEntry(e.getName, in.readAllBytes()) finally in.close()
-            n += 1
-          }
-      } finally jar.close()
-    }
-    require(n > 0, "auditCodeKey: zero graft .class resources found " +
-      "under the code source — refusing a constant key")
-    md.digest().map("%02x".format(_)).mkString.take(16)
-  }
-
   def metaResourceAudit(spark: SparkSession, dir: String): DataFrame = {
     val parent = new java.io.File(dir).getParentFile
     // FAIL, don't degrade: measuring the same dir twice reads ratio
@@ -1210,22 +1146,17 @@ object Warehouse {
       // deterministic given the plan and the fixture bytes, so the
       // certificate is cacheable like any trained index — the panel
       // was 11.3 s (3.9% of the whole bench) re-measuring the same
-      // unchanged plans every run. Invalidation keys on the BYTECODE
-      // of the WHOLE graft package (not on plan hashes: CONSTRUCTING
-      // an iterative entry like graph_hits executes its eager
-      // per-superstep checkpoints, so a plan probe costs as much as
-      // the measurement it tries to skip). Package-wide bytecode
-      // over-invalidates — any graft edit forces one honest ~8 s
-      // re-measure — which is the safe direction for a certificate;
-      // the r16 five-file version under-invalidated on edits confined
-      // to nested/anon classes or helpers. peak/spill ride along as the
+      // unchanged plans every run. Invalidation rides on the cache
+      // base's code version, the bytecode of the WHOLE graft package
+      // (not plan hashes: CONSTRUCTING an iterative entry like
+      // graph_hits executes its eager per-superstep checkpoints, so a
+      // plan probe costs as much as the measurement it tries to skip);
+      // any graft edit forces one honest ~8 s re-measure, which is the
+      // safe direction for a certificate. peak/spill ride along as the
       // measuring run's environment-dependent observations (the
       // entry is rows-only declared for exactly that reason).
       // data key spans every table the panel reads (graph: orders +
-      // lineitem, sim: embeddings, q103: lineitem) at both fixtures —
-      // per-table fingerprints CONCATENATED directly (collapsing them
-      // through a second 32-bit hash was weaker than the artifact-key
-      // discipline everywhere else, ADVICE r16)
+      // lineitem, sim: embeddings, q103: lineitem) at both fixtures
       val dataKey = Seq(lo, hi)
         .flatMap(d => Seq("orders", "lineitem", "embeddings")
           .map(tableFingerprint(d, _))).mkString("-")
@@ -1242,9 +1173,7 @@ object Warehouse {
           "spark.sql.shuffle.partitions")
           .map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")
           .mkString("|")))
-      val codeKey = auditCodeKey
-      val root = artifactRoot(
-          s"audit-$name-$dataKey-$confKey-$codeKey") { staged =>
+      val root = artifactRoot(s"audit-$name-$dataKey-$confKey") { staged =>
         // WARM PASS (un-instrumented) at both SFs first: panel entries
         // lazily build cross-JVM cached artifacts (trade graph, IVF
         // index, seed BFS) on first touch, and in a fresh artifact

@@ -134,7 +134,7 @@ object FileSources {
     // the span spec) measure the min/max-stat read path, not two
     // repeated range-partitioned writes — and file boundaries become
     // stable across runs
-    val root = artifactRoot(s"zorder-${tableFingerprint(dir, "orders")}-f$files") { staged =>
+    val root = artifactRoot(s"zorder-${tableFingerprint(dir, "orders")}") { staged =>
       src.crossJoin(broadcast(b))
         .withColumn("so", scaled("o_orderkey", col("o_lo"), col("o_hi")))
         .withColumn("sp", scaled("o_custkey", col("p_lo"), col("p_hi")))
@@ -305,10 +305,7 @@ object FileSources {
     * partition-by-low-cardinality-column is the first line of defense
     * before any row filter runs. */
   def partitionedPruning(spark: SparkSession, dir: String): DataFrame = {
-    val out = uniq("part")
-    t(spark, dir, "orders")
-      .write.mode(SaveMode.Overwrite).partitionBy("o_orderstatus").parquet(out)
-    spark.read.parquet(out)
+    writeParquet(t(spark, dir, "orders"), uniq("part"), Seq("o_orderstatus"))
       .filter(col("o_orderstatus") === "F")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
@@ -358,28 +355,26 @@ object FileSources {
     // file_id write. Era-2 starts 2001: day-granularity layouts are for
     // the RECENT era, which is also why real tables evolve mid-history.
     // The two-era layout is memoized per (orders fingerprint) — bench
-    // reps measure the two pruned scans, not the era writes.
+    // reps measure the two pruned scans, not the era writes. Both eras
+    // read back with the schema they were written with: the partition
+    // columns stay strings, and an empty era reads as empty.
+    val o = t(spark, dir, "orders")
+      .select(col("o_orderkey"), col("o_orderdate"),
+        col("o_orderpriority"), col("o_totalprice"))
+    val month = o.filter(col("o_orderdate") < "2001-01-01")
+      .withColumn("pmonth", date_format(col("o_orderdate"), "yyyy-MM"))
+    val day = o.filter(col("o_orderdate") >= "2001-01-01")
+      .withColumn("pday", date_format(col("o_orderdate"), "yyyy-MM-dd"))
     val root = artifactRoot(s"evo-${tableFingerprint(dir, "orders")}") { staged =>
-      val o = t(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderdate"),
-          col("o_orderpriority"), col("o_totalprice"))
-      o.filter(col("o_orderdate") < "2001-01-01")
-        .withColumn("pmonth", date_format(col("o_orderdate"), "yyyy-MM"))
-        .repartition(col("pmonth"))
-        .write.partitionBy("pmonth").parquet(s"$staged/month")
-      o.filter(col("o_orderdate") >= "2001-01-01")
-        .withColumn("pday", date_format(col("o_orderdate"), "yyyy-MM-dd"))
-        .repartition(col("pday"))
-        .write.partitionBy("pday").parquet(s"$staged/day")
+      month.repartition(col("pmonth")).write.partitionBy("pmonth").parquet(s"$staged/month")
+      day.repartition(col("pday")).write.partitionBy("pday").parquet(s"$staged/day")
     }
-    val era1 = s"$root/month"
-    val era2 = s"$root/day"
     // the query: [2000-10-15, 2001-03-15] spans the era boundary
-    val q1 = spark.read.parquet(era1)
+    val q1 = spark.read.schema(month.schema).parquet(s"$root/month")
       .filter(col("pmonth") >= "2000-10" && col("pmonth") <= "2001-03")
       .filter(col("o_orderdate") >= "2000-10-15" && col("o_orderdate") <= "2001-03-15")
       .drop("pmonth")
-    val q2 = spark.read.parquet(era2)
+    val q2 = spark.read.schema(day.schema).parquet(s"$root/day")
       .filter(col("pday") >= "2000-10-15" && col("pday") <= "2001-03-15")
       .drop("pday")
     q1.unionByName(q2)
@@ -1278,11 +1273,10 @@ object FileSources {
     val restate = orders
       .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .withColumn("cents", col("cents") + 1)
-    withConfs(spark, Seq("spark.sql.sources.partitionOverwriteMode" -> "dynamic")) {
-      restate.write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
+    val table = withConfs(spark, Seq("spark.sql.sources.partitionOverwriteMode" -> "dynamic")) {
+      writeParquet(restate, out, Seq("o_orderpriority"), "overwrite")
     }
-    spark.read.parquet(out)
-      .groupBy(col("o_orderpriority"))
+    table.groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).cast("long").as("n_orders"),
         sum(col("cents")).cast("long").as("sum_cents"))
       .orderBy(col("o_orderpriority"))

@@ -206,17 +206,42 @@ class Round10Spec extends AnyFunSuite {
   }
 
   test("stale .tmp staging dirs are swept; fresh and published roots survive") {
-    val base = new java.io.File(util.scratchDir("sweeptest"))
+    val parent = new java.io.File(util.scratchDir("sweeptest"))
+    val base = new java.io.File(parent, "graft_artifact_cache_current")
     base.mkdirs()
     val stale = new java.io.File(base, ".tmp-stale"); stale.mkdirs()
     new java.io.File(stale, "junk").createNewFile()
     stale.setLastModified(System.currentTimeMillis - 2L * 60 * 60 * 1000)
     val fresh = new java.io.File(base, ".tmp-fresh"); fresh.mkdirs()
     val published = new java.io.File(base, "some-key"); published.mkdirs()
-    util.sweepStaleStaging(base)
+    util.sweepStale(parent, base)
     assert(!stale.exists, "stale staging dir not swept")
     assert(fresh.exists, "IN-FLIGHT staging dir must never be swept")
     assert(published.exists, "published root must never be swept")
+  }
+
+  test("bases of other code are swept a day after their last touch") {
+    val parent = new java.io.File(util.scratchDir("basesweep"))
+    def dir(name: String, ageMs: Long): java.io.File = {
+      val d = new java.io.File(parent, name)
+      new java.io.File(d, "some-key").mkdirs()
+      d.setLastModified(System.currentTimeMillis - ageMs)
+      d
+    }
+    val twoDays = 2L * 24 * 60 * 60 * 1000
+    val current = dir("graft_artifact_cache_0123456789abcdef", twoDays)
+    val old = dir("graft_artifact_cache_r10", twoDays)
+    val live = dir("graft_artifact_cache_fedcba9876543210", 0L)
+    val other = dir("graft_other_scratch", twoDays)
+    val staging = new java.io.File(current, ".tmp-stale"); staging.mkdirs()
+    staging.setLastModified(System.currentTimeMillis - twoDays)
+    util.sweepStale(parent, current)
+    assert(!old.exists, "a base of other code untouched for two days must go")
+    assert(!staging.exists, "a stale staging dir in the current base must go")
+    assert(current.exists && new java.io.File(current, "some-key").exists,
+      "the current base must never be swept, however old")
+    assert(live.exists, "a base another JVM touched just now must survive")
+    assert(other.exists, "a directory that is not a cache base must survive")
   }
 
   // ——— round-10 additions: FPS coreset, bloom-pruned ingest, lineage ———

@@ -165,8 +165,8 @@ class Round16Spec extends AnyFunSuite {
     innerRoot()
     assert(innerBuilds == 1 && util.artifactBuildLog.size == before)
     // cleanup: these synthetic keys should not linger in the cache dir
-    // — path derived from the LIVE CacheRev (a hardcoded suffix would
-    // silently no-op after a revision bump, ADVICE r16), and the
+    // — path derived from the LIVE base (a hardcoded code version
+    // would silently no-op after any edit, ADVICE r16), and the
     // in-JVM map entries are evicted so they can't point at deleted
     // directories for the rest of the session
     for (k <- Seq(outer, inner)) {
@@ -175,12 +175,43 @@ class Round16Spec extends AnyFunSuite {
     }
   }
 
-  test("auditCodeKey: 16 lowercase hex chars, stable within a JVM — " +
-      "the certificate's code-version key cannot be empty or drift " +
-      "between probes of the same build") {
-    val k = operators.Warehouse.auditCodeKey
+  test("codeVersion: 16 lowercase hex chars, stable within a JVM") {
+    // the cache base's code key cannot be empty or drift between
+    // probes of the same build
+    val k = util.codeVersion
     assert(k.matches("[0-9a-f]{16}"), s"malformed code key: $k")
-    assert(k == operators.Warehouse.auditCodeKey)
+    assert(k == util.codeVersion)
+  }
+
+  test("codeVersionOf hashes class bytes, not where the tree lives") {
+    val scratch = java.nio.file.Files.createTempDirectory("graft_codever").toFile
+    try {
+      def tree(name: String, bytes: Map[String, Array[Byte]]): java.io.File = {
+        val root = new java.io.File(scratch, name)
+        for ((rel, b) <- bytes) {
+          val f = new java.io.File(root, rel)
+          f.getParentFile.mkdirs()
+          java.nio.file.Files.write(f.toPath, b)
+        }
+        root.mkdirs()
+        root
+      }
+      val classes = Map(
+        "graft/A.class" -> Array[Byte](1, 2, 3),
+        "graft/ops/B$anon$1.class" -> Array[Byte](4, 5),
+        "graft/notes.txt" -> Array[Byte](9))
+      val v = util.codeVersionOf(tree("one", classes))
+      assert(v.matches("[0-9a-f]{16}"))
+      assert(util.codeVersionOf(tree("two", classes)) == v,
+        "the same bytes under another root must give the same version")
+      val edited = classes.updated("graft/ops/B$anon$1.class", Array[Byte](4, 6))
+      assert(util.codeVersionOf(tree("three", edited)) != v,
+        "one changed byte in one class must give a new version")
+      val e = intercept[IllegalArgumentException](
+        util.codeVersionOf(tree("empty", Map("graft/notes.txt" -> Array[Byte](9)))))
+      assert(e.getMessage.contains("zero graft .class"))
+      assert(util.artifactCacheBase.getName == "graft_artifact_cache_" + util.codeVersion)
+    } finally util.deleteRecursively(scratch)
   }
 
   test("q103 re-plan: the zero-fill is analytic — no Generate " +

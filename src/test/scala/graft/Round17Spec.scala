@@ -193,15 +193,15 @@ class Round17Spec extends AnyFunSuite {
     assert(Bench.preProbeProceed(Nil))
   }
 
-  test("auditCodeKey covers the whole graft package: nested and " +
-      "anonymous classes are in the digest's input set (an edit " +
-      "confined to Warehouse$AuditProbe must re-key the certificate)") {
-    // shape (also asserted by Round16Spec): well-formed, stable
-    val k = operators.Warehouse.auditCodeKey
+  test("codeVersion covers the whole graft package, nested classes too") {
+    // nested and anonymous classes are in the digest's input set: an
+    // edit confined to Warehouse$AuditProbe must re-key the cache.
+    // Shape (also asserted by Round16Spec): well-formed, stable
+    val k = util.codeVersion
     assert(k.matches("[0-9a-f]{16}"))
     // the enumeration the key hashes must include nested classes —
     // replicate the walk and assert the probe class is in it
-    val loc = new java.io.File(operators.Warehouse.getClass
+    val loc = new java.io.File(util.getClass
       .getProtectionDomain.getCodeSource.getLocation.toURI)
     assert(loc.isDirectory, s"test classpath should be a dir: $loc")
     def walk(f: java.io.File): Seq[java.io.File] = {

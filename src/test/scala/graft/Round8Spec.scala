@@ -48,8 +48,7 @@ class Round8Spec extends AnyFunSuite {
         case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.length
       }
       assert(locals.isEmpty, s"driver-built LocalRelation(s) in ANN plan: $locals")
-      val physical = df.queryExecution.executedPlan.toString
-      assert(physical.contains(new java.io.File(root).getName),
+      assert(TestSpark.scannedRoots(df).exists(_.contains(new java.io.File(root).getName)),
         s"plan never scans the index root $root")
     }
   }

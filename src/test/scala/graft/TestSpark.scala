@@ -16,6 +16,16 @@ object TestSpark {
   }
   val sf = "/root/testdata/sf0.001"
 
+  /** Root paths of every file scan in `df`'s physical plan, subqueries
+    * included. A plan string abbreviates each scan's location to
+    * `spark.sql.maxMetadataStringLength` characters, so a long temp
+    * path can cut off the directory name a spec looks for. */
+  def scannedRoots(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collectWithSubqueries {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.toString)
+    }.flatten
+
   /** Spark jobs that `body` starts on the calling thread, counted by job
     * group. The listener bus is asynchronous, so a sentinel job in a group
     * of its own is run after `body`; once the listener has seen it, every
